@@ -33,9 +33,7 @@ from pyanomalydetector_spark.functions.stats import (  # noqa: E402
 from pyanomalydetector_spark.checks.core import (  # noqa: E402
     Check, run_checks, default_suite,
 )
-from pyanomalydetector_spark.checks.drift import (  # noqa: E402
-    psi_by_partition, ks_by_partition,
-)
+from pyanomalydetector_spark.checks.drift import ks_by_partition  # noqa: E402
 from pyanomalydetector_spark.operators.detect import (  # noqa: E402
     DetectorConfig, detect1, detect2, adjacent_diff_stats, local_peaks,
 )
@@ -304,10 +302,13 @@ def _q_seq_length_percentiles_sketch(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def _q_seq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSI of per-partition n_tok distribution vs whole-table baseline."""
+    """PSI of per-partition n_tok distribution vs whole-table baseline: the
+    drift_psi check alone, scored by the fused suite pass."""
     seq = load_sequences(spark, sf_dir)
-    return psi_by_partition(seq, "source", "n_tok", n_buckets=10) \
-        .select("partition_id", F.round("psi", 6).alias("psi"))
+    res = run_checks(seq, [Check("psi", "drift_psi",
+                                 {"value_col": "n_tok", "buckets": 10})])
+    return res.verdicts.select("partition_id",
+                               F.round("observed", 6).alias("psi"))
 
 
 def _q_seq_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:

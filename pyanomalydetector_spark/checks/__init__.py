@@ -5,7 +5,7 @@ from pyanomalydetector_spark.checks.core import (
     VERDICT_SCHEMA,
     VIOLATION_SCHEMA,
 )
-from pyanomalydetector_spark.checks.drift import psi_by_partition, ks_by_partition
+from pyanomalydetector_spark.checks.drift import ks_by_partition
 
 __all__ = [
     "Check",
@@ -13,6 +13,5 @@ __all__ = [
     "run_checks",
     "VERDICT_SCHEMA",
     "VIOLATION_SCHEMA",
-    "psi_by_partition",
     "ks_by_partition",
 ]

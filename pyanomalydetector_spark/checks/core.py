@@ -39,6 +39,12 @@ Check kinds and their reference lineage:
 - ``drift_psi`` / ``drift_ks`` — distribution drift vs pinned baseline
   (recasting detect2/3's recent-vs-historical comparisons; see drift.py).
 
+``column_stats``, ``zscore_threshold``, ``referential``,
+``n_tok_consistency``, ``token_range`` and ``drift_psi`` have one
+implementation, the fused SQL builder in checks/fused.py; this module builds
+the kinds that need their own shuffle (``unique``, ``token_invariant``,
+``drift_ks``) and unions everything in :func:`run_checks`.
+
 Scale posture: every check is a groupBy/join plan whose shuffled data is
 O(#partitions) or O(#violations), never O(rows) beyond the initial scan; the
 uniqueness check pre-aggregates behind a salt to keep hot keys off one reducer.
@@ -55,8 +61,9 @@ from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
-from pyanomalydetector_spark.functions.stats import sufficient_stats, finalize_mean_std
-from pyanomalydetector_spark.checks.drift import psi_by_partition, ks_by_partition
+from pyanomalydetector_spark.checks.drift import (
+    ks_by_partition, ks_by_partition_counts,
+)
 
 VERDICT_SCHEMA = StructType([
     StructField("partition_id", StringType()),
@@ -161,90 +168,6 @@ def _finish_violations(v: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------- checks ----
-
-def _check_column_stats(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    value_col = check.params.get("value_col", "n_tok")
-    min_count = int(check.params.get("min_count", 1))
-
-    stats = finalize_mean_std(sufficient_stats(df, [pcol], value_col)) \
-        .withColumnRenamed(pcol, "partition_id")
-    verdicts = stats.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (F.col("cnt") >= min_count).alias("passed"),
-        F.col("cnt").cast("double").alias("observed"),
-        F.lit(float(min_count)).alias("expected"),
-        F.lit(float(min_count)).alias("threshold"),
-        F.lit(0).alias("n_violations"),
-        F.col("cnt").alias("rows_scanned"),
-    )
-    return CheckResult(_finish_verdicts(verdicts),
-                       _empty(df.sparkSession, VIOLATION_SCHEMA))
-
-
-def _check_zscore_threshold(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    """detect1: partition mean vs pinned baseline mean/std with λ·σ + rel-diff.
-
-    Row-level violations replicate _filter_anomalies (detector.py:382-404):
-    within failing partitions, rows whose value exceeds baseline mean ± λ·σ.
-    """
-    value_col = check.params.get("value_col", "n_tok")
-    lam = float(check.params.get("lambda", 2.0))
-    ignore_diff_rate = float(check.params.get("ignore_diff_rate", 0.0))
-    baseline = check.params.get("baseline")  # optional DataFrame(mean, std)
-    scalars = check.params.get("baseline_scalars")  # pinned {mean, std}
-
-    if scalars is not None:
-        baseline = df.sparkSession.createDataFrame(
-            [(float(scalars["mean"]), float(scalars["std"]))], "mean double, std double")
-    elif baseline is None:
-        baseline = finalize_mean_std(
-            sufficient_stats(df.select(F.lit("all").alias("_g"), value_col),
-                             ["_g"], value_col)).select("mean", "std")
-    base = F.broadcast(baseline.select(F.col("mean").alias("mean_t"),
-                                       F.col("std").alias("std_t")))
-
-    part_means = finalize_mean_std(sufficient_stats(df, [pcol], value_col)) \
-        .select(F.col(pcol).alias("partition_id"),
-                F.col("mean").alias("mean_h"),
-                F.col("cnt").alias("rows_scanned"))
-
-    j = part_means.crossJoin(base)
-    dev = F.abs(F.col("mean_h") - F.col("mean_t"))
-    # detector.py:211 threshold; detector.py:218 *intended* rel-diff guard.
-    # try_divide keeps this ANSI-safe when mean_t == 0 (NULL → fail is false).
-    fail = (dev > lam * F.col("std_t")) & \
-           (F.col("mean_t") > 0) & \
-           (F.try_divide(dev, F.col("mean_t")) > ignore_diff_rate)
-    verdicts = j.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (~fail).alias("passed"),
-        F.col("mean_h").alias("observed"),
-        F.col("mean_t").alias("expected"),
-        (lam * F.col("std_t")).alias("threshold"),
-        F.lit(0).alias("n_violations"),
-        F.col("rows_scanned"),
-    )
-
-    failing = j.filter(fail).select("partition_id", "mean_t", "std_t")
-    viol = (
-        # NULL-SAFE: a failing NULL partition's rows must still emit
-        # violations (plain equality would silently drop them)
-        df.join(F.broadcast(failing), df[pcol].eqNullSafe(failing["partition_id"]))
-          .filter(F.abs(F.col(value_col) - F.col("mean_t")) > lam * F.col("std_t"))
-          .select(
-              F.col("partition_id"),
-              F.lit(check.check_id).alias("check_id"),
-              F.col("doc_id"),
-              F.col(value_col).cast("string").alias("observed"),
-              F.concat(F.lit("within "), F.round("mean_t", 6).cast("string"),
-                       F.lit(" ± "), F.round(lam * F.col("std_t"), 6).cast("string"))
-               .alias("expected"),
-          )
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
-
 
 def _unique_per_part(df: DataFrame, key: str, pcol: str,
                      salt_buckets: int = 0,
@@ -491,142 +414,6 @@ def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
                        cached=(per_part,))
 
 
-def _check_referential(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    """source ∈ allowed-dimension membership (broadcast anti-join)."""
-    column = check.params.get("column", "source")
-    allowed = check.params.get("allowed")
-    spark = df.sparkSession
-    if isinstance(allowed, (list, tuple, set)):
-        dim = spark.createDataFrame([(a,) for a in sorted(allowed)], f"{column} string")
-    else:
-        dim = allowed  # a DataFrame with one column named ``column``
-
-    viol_rows = df.join(F.broadcast(dim), on=column, how="left_anti")
-    per_part = df.groupBy(F.col(pcol).alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned"))
-    bad_per_part = viol_rows.groupBy(F.col(pcol).alias("_bp")) \
-                            .agg(F.count(F.lit(1)).alias("n_bad"))
-    # NULL-SAFE: a NULL partition's bad-row count must attach to its verdict
-    # (plain equality would fill 0 and report a false pass)
-    verdicts = per_part.join(
-            bad_per_part,
-            per_part["partition_id"].eqNullSafe(bad_per_part["_bp"]), "left") \
-        .drop("_bp") \
-        .na.fill({"n_bad": 0}) \
-        .select(
-            "partition_id",
-            F.lit(check.check_id).alias("check_id"),
-            (F.col("n_bad") == 0).alias("passed"),
-            F.col("n_bad").cast("double").alias("observed"),
-            F.lit(0.0).alias("expected"),
-            F.lit(0.0).alias("threshold"),
-            F.col("n_bad").alias("n_violations"),
-            F.col("rows_scanned"),
-        )
-    viol = viol_rows.select(
-        F.col(pcol).alias("partition_id"),
-        F.lit(check.check_id).alias("check_id"),
-        F.col("doc_id"),
-        F.col(column).cast("string").alias("observed"),
-        F.lit("member of allowed source set").alias("expected"),
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
-
-
-def _check_n_tok_consistency(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    """Metadata invariant: declared n_tok equals size(tokens).
-
-    NULL-SAFE: plain ``!=`` evaluates to NULL when either side is NULL
-    (``size(NULL)`` is NULL in non-legacy Spark), so a row with NULL
-    metadata but non-NULL tokens — or vice versa — would silently PASS
-    the invariant. ``<=>`` makes the contradiction count; NULL on BOTH
-    sides (no declared count, no tokens) is consistent and passes."""
-    bad = ~F.col("n_tok").eqNullSafe(F.size("tokens"))
-    per_part = df.groupBy(F.col(pcol).alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned"),
-        F.sum(F.when(bad, 1).otherwise(0)).alias("n_bad"),
-    )
-    verdicts = per_part.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (F.col("n_bad") == 0).alias("passed"),
-        F.col("n_bad").cast("double").alias("observed"),
-        F.lit(0.0).alias("expected"),
-        F.lit(0.0).alias("threshold"),
-        F.col("n_bad").alias("n_violations"),
-        F.col("rows_scanned"),
-    )
-    viol = df.filter(bad).select(
-        F.col(pcol).alias("partition_id"),
-        F.lit(check.check_id).alias("check_id"),
-        F.col("doc_id"),
-        F.col("n_tok").cast("string").alias("observed"),
-        F.size("tokens").cast("string").alias("expected"),
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
-
-
-def _check_token_range(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    """Token-id vocabulary-bounds check: every element of the token array
-    must be non-NULL and lie in ``[min_value, max_value)`` — the tokenized-
-    corpus analog of the reference's hard threshold predicate (detect1's
-    absolute limits, /root/reference/data_processing/detector.py:211): a
-    token id outside the tokenizer's vocabulary, or a NULL element, proves
-    upstream corruption regardless of any distribution.
-
-    Semantics (pinned by tests/test_checks.py + the cross-engine fuzz):
-
-    - a NULL tokens ARRAY passes — array presence/length is
-      ``n_tok_consistency``'s contract, not range's;
-    - a NULL ELEMENT violates (no real tokenizer emits NULL);
-    - violation rows carry the FIRST offending element (``'NULL'`` for a
-      NULL element) and the bound as ``expected``.
-
-    Plan shape: one pruned scan → groupBy(partition) conditional sum over
-    an ``exists()`` array predicate (whole-stage codegen, shuffle
-    O(#partitions)); violations are a filter branch of the same scan
-    (O(#violations)). Fully fusible (checks/fused.py) — inside the fused
-    suite this check costs ZERO extra passes.
-    """
-    col = check.params.get("value_col", "tokens")
-    lo = int(check.params.get("min_value", 0))
-    hi = int(check.params["max_value"])
-
-    def bad_elem(t: Column) -> Column:
-        # single-arg lambda with lo/hi captured by closure (a 2-arg lambda
-        # would be called as (element, index) — CLAUDE.md); the predicate
-        # is never NULL because t.isNull() absorbs the NULL element case
-        return t.isNull() | (t < F.lit(lo)) | (t >= F.lit(hi))
-
-    arr = F.col(col)
-    row_bad = F.when(arr.isNull(), F.lit(False)).otherwise(F.exists(arr, bad_elem))
-    per_part = df.groupBy(F.col(pcol).alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned"),
-        F.sum(F.when(row_bad, 1).otherwise(0)).alias("n_bad"),
-    )
-    verdicts = per_part.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (F.col("n_bad") == 0).alias("passed"),
-        F.col("n_bad").cast("double").alias("observed"),
-        F.lit(0.0).alias("expected"),
-        F.lit(0.0).alias("threshold"),
-        F.col("n_bad").alias("n_violations"),
-        F.col("rows_scanned"),
-    )
-    # try_element_at: ANSI-safe on the (unreachable) empty-filter case —
-    # row_bad guarantees at least one offending element survives the filter
-    first_bad = F.try_element_at(F.filter(arr, bad_elem), F.lit(1))
-    viol = df.filter(row_bad).select(
-        F.col(pcol).alias("partition_id"),
-        F.lit(check.check_id).alias("check_id"),
-        F.col("doc_id"),
-        F.coalesce(first_bad.cast("string"), F.lit("NULL")).alias("observed"),
-        F.lit(f"token id in [{lo}, {hi})").alias("expected"),
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
-
-
 def _token_digest_join(df: DataFrame, expected_df: DataFrame,
                        pcol: str) -> tuple[DataFrame, Column]:
     """The token-invariant's shared lazy digest frame: one scan per side,
@@ -754,59 +541,35 @@ def _check_token_invariant(df: DataFrame, check: Check, pcol: str) -> CheckResul
     return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
 
 
-def _check_drift(df: DataFrame, check: Check, pcol: str, stat: str) -> CheckResult:
+def _check_drift_ks(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     value_col = check.params.get("value_col", "n_tok")
     threshold = float(check.params.get("threshold", 0.2))
-    baseline = check.params.get("baseline")  # optional raw DataFrame
     cache_registry: list = []
 
-    if stat == "psi":
-        pinned = check.params.get("pinned_hist")
-        if pinned is not None:
-            from pyanomalydetector_spark.checks.drift import psi_by_partition_pinned
-            scored = psi_by_partition_pinned(
-                df, pcol, value_col, pinned["lo"], pinned["hi"],
-                pinned["counts"], pinned["n_base"])
-        else:
-            scored = psi_by_partition(
-                df, pcol, value_col,
-                n_buckets=int(check.params.get("buckets", 10)),
-                baseline=baseline, cache_registry=cache_registry,
-                # opt-in one-scan route for structurally bounded columns
-                # (token length is capped by the context size); unbounded
-                # continuous columns keep the two-pass fixed-width path
-                low_cardinality=bool(check.params.get("low_cardinality",
-                                                      False)))
-        obs = "psi"
-    else:
-        base_counts = check.params.get("baseline_counts")
-        if base_counts is not None:
-            from pyanomalydetector_spark.checks.drift import ks_by_partition_counts
-            scored = ks_by_partition_counts(df, pcol, value_col, base_counts)
-        else:
-            scored = ks_by_partition(
-                df, pcol, value_col, baseline=baseline,
-                cache_registry=cache_registry,
-                # structurally bounded columns (token length ≤ context
-                # size) skip the cardinality guard's blocking job and run
-                # the fully-lazy single-plan route
-                bounded=bool(check.params.get("bounded", False)),
-                # rows_scanned derives from the counts shuffle — saves the
-                # second raw-input scan below
-                include_rows=True)
-        obs = "ks_d"
-
-    if "rows_scanned" not in scored.columns:
+    base_counts = check.params.get("baseline_counts")
+    if base_counts is not None:
+        scored = ks_by_partition_counts(df, pcol, value_col, base_counts)
         # NULL-SAFE: keep the NULL partition's verdict row
         rows = _rows_per_partition(df, pcol).withColumnRenamed(
             "partition_id", "_rp")
         scored = scored.join(
             rows, scored["partition_id"].eqNullSafe(rows["_rp"])).drop("_rp")
+    else:
+        scored = ks_by_partition(
+            df, pcol, value_col, baseline=check.params.get("baseline"),
+            cache_registry=cache_registry,
+            # structurally bounded columns (token length ≤ context size)
+            # skip the cardinality guard's blocking job and run the
+            # fully-lazy single-plan route
+            bounded=bool(check.params.get("bounded", False)),
+            # rows_scanned derives from the counts shuffle — saves a second
+            # raw-input scan
+            include_rows=True)
     verdicts = scored.select(
         "partition_id",
         F.lit(check.check_id).alias("check_id"),
-        (F.col(obs) <= threshold).alias("passed"),
-        F.col(obs).alias("observed"),
+        (F.col("ks_d") <= threshold).alias("passed"),
+        F.col("ks_d").alias("observed"),
         F.lit(threshold).alias("expected"),
         F.lit(threshold).alias("threshold"),
         F.lit(0).alias("n_violations"),
@@ -817,29 +580,27 @@ def _check_drift(df: DataFrame, check: Check, pcol: str, stat: str) -> CheckResu
                        cached=tuple(cache_registry))
 
 
+# kinds with their own plans; the aggregate kinds are built by checks/fused.py
 _DISPATCH = {
-    "column_stats": _check_column_stats,
-    "zscore_threshold": _check_zscore_threshold,
     "unique": _check_unique,
-    "referential": _check_referential,
-    "n_tok_consistency": _check_n_tok_consistency,
-    "token_range": _check_token_range,
     "token_invariant": _check_token_invariant,
-    "drift_psi": lambda df, c, p: _check_drift(df, c, p, "psi"),
-    "drift_ks": lambda df, c, p: _check_drift(df, c, p, "ks"),
+    "drift_ks": _check_drift_ks,
 }
 
 
 def run_checks(df: DataFrame, checks: Iterable[Check],
-               partition_col: str = "source", fuse: bool = True) -> CheckResult:
+               partition_col: str = "source") -> CheckResult:
     """Run a suite of checks; union the per-check verdict/violation frames.
 
-    With ``fuse=True`` (default), aggregate-style checks execute on the fused
-    two-scan path (checks/fused.py): one groupBy pass computes every
-    per-partition aggregate, one filter pass emits every row-level violation —
-    at 100 TB this is the difference between 2 and 7+ full table scans. Checks
-    whose semantics need their own shuffle (``unique``, ``drift_ks``,
-    ``token_invariant``) or carry DataFrame-valued params keep per-check plans.
+    Aggregate-style checks (``column_stats``, ``zscore_threshold``,
+    ``referential``, ``n_tok_consistency``, ``token_range``, ``drift_psi``)
+    execute on the fused two-scan path (checks/fused.py): one groupBy pass
+    computes every per-partition aggregate, one filter pass emits every
+    row-level violation — at 100 TB this is the difference between 2 and 7+
+    full table scans. Checks whose semantics need their own shuffle
+    (``unique``, ``drift_ks``, ``token_invariant``) keep their own plans.
+    DataFrame-valued params of fused kinds are first collected into plain
+    config (:func:`~pyanomalydetector_spark.checks.fused.plain_config`).
 
     The input is deliberately NOT cached: each pass re-scans the columnar
     source with column pruning (a pass that only needs ``n_tok`` reads only
@@ -847,16 +608,13 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
     memory — at 10¹²-row scale the input never fits cache, so the engine is
     designed around cheap pruned re-scans instead.
     """
-    from pyanomalydetector_spark.checks.fused import run_fused, split_fusible
+    from pyanomalydetector_spark.checks.fused import (
+        plain_config, run_fused, split_fusible,
+    )
 
     spark = df.sparkSession
-    checks = list(checks)
-    verdict_frames: list[DataFrame] = []
-    violation_frames: list[DataFrame] = []
-
-    fused, rest = split_fusible(checks) if fuse else ([], checks)
-    if len(fused) < 2:          # fusion only pays when scans are shared
-        rest, fused = checks, []
+    checks = [c for c in map(plain_config, checks) if c is not None]
+    fused, rest = split_fusible(checks)
 
     for check in rest:
         if _DISPATCH.get(check.kind) is None:
@@ -875,15 +633,13 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
         with ThreadPoolExecutor(max_workers=1 + len(rest)) as ex:
             fut_fused = ex.submit(run_fused, df, fused, partition_col)
             fut_rest = [ex.submit(run_rest, c) for c in rest]
-            v, w, cached = fut_fused.result()
+            verdict_frames, violation_frames, cached = fut_fused.result()
             rest_results = [f.result() for f in fut_rest]
     else:
-        v, w, cached = run_fused(df, fused, partition_col) if fused \
-            else ([], [], [])
+        verdict_frames, violation_frames, cached = \
+            run_fused(df, fused, partition_col) if fused else ([], [], [])
         rest_results = [run_rest(c) for c in rest]
 
-    verdict_frames += v
-    violation_frames += w
     for res in rest_results:
         verdict_frames.append(res.verdicts)
         violation_frames.append(res.violations)

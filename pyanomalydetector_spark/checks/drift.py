@@ -1,4 +1,5 @@
-"""Distribution-drift scoring: PSI and two-sample KS per partition.
+"""Distribution-drift scoring: two-sample KS per partition, plus the PSI
+baseline-histogram capture.
 
 Recasts the reference's detect2/detect3 "recent distribution vs historical
 distribution" semantics (/root/reference/data_processing/detector.py:286-337,
@@ -6,10 +7,12 @@ distribution" semantics (/root/reference/data_processing/detector.py:286-337,
 standard drift statistics of the per-partition ``n_tok`` distribution against a
 pinned baseline (the whole-table distribution, or a supplied histogram).
 
-Everything is expressed as DataFrame aggregations + window cumulative sums —
-no UDFs, fully whole-stage-codegen, one shuffle per statistic. The grid sizes
-are #distinct-values × #partitions (tiny relative to row count), so this scales
-to arbitrarily many input rows.
+KS is expressed as DataFrame aggregations + window cumulative sums — no
+UDFs, fully whole-stage-codegen, one shuffle per statistic. The grid sizes are
+#distinct-values × #partitions (tiny relative to row count), so this scales to
+arbitrarily many input rows. PSI itself is scored inside the fused suite pass
+(checks/fused.py); this module keeps its smoothing constant and
+:func:`psi_histogram`, which pins a baseline histogram for that pass.
 """
 
 from __future__ import annotations
@@ -28,8 +31,8 @@ def _pid_nullsafe_join(left: DataFrame, right: DataFrame, key2: str | None,
     A plain equi-join on partition_id never matches NULL = NULL, so a NULL
     partition key — exactly the dirty group key a quality engine must still
     score — would silently read as zero counts (grid joins) or drop its
-    verdict row (result joins). ``key2`` (bucket/value) stays plain: a NULL
-    value carries no probability mass by design, and buckets are never NULL.
+    verdict row (result joins). ``key2`` (the value) stays plain: a NULL
+    value carries no probability mass by design.
     """
     r = right.withColumnRenamed("partition_id", "_rp")
     cond = left["partition_id"].eqNullSafe(F.col("_rp"))
@@ -39,173 +42,33 @@ def _pid_nullsafe_join(left: DataFrame, right: DataFrame, key2: str | None,
     return left.join(r, cond, how).drop("_rp", *(["_rk"] if key2 else []))
 
 
-def _bucket_expr(value: Column, lo, hi, n_buckets: int) -> Column:
-    """Fixed-width bucket index over [lo, hi] with edge clamping — the ONE
-    definition every PSI path (self-baseline, explicit-baseline,
-    low-cardinality, pinned) derives from, mirrored by the DuckDB oracle.
-    Degenerate range (or empty input) → bucket 0; a NULL value coerces to
-    bucket 0 via the null-skipping greatest, identically in both engines.
+def psi_histogram(df: DataFrame, value_col: str, n_buckets: int) -> dict:
+    """Capture ``value_col``'s PSI baseline histogram in the pinned form the
+    fused builder scores against: ``{lo, hi, counts, n_base}``.
+
+    Fixed-width buckets over [lo, hi] with edge clamping, the same bucket
+    expression checks/fused.py applies to the scored rows; a NULL value
+    lands in bucket 0 (GREATEST skips NULLs), so ``n_base`` counts every
+    row. Two tiny collects: bounds + row count, then the bucket counts. A
+    degenerate range needs only the first: with ``hi == lo`` every row is in
+    bucket 0, and a frame with no non-NULL value (empty, or an all-NULL
+    column) has ``lo = hi = None``, which the builder buckets the same way.
     """
-    if lo is None or hi == lo:
-        return F.lit(0)
-    width = F.lit((hi - lo) / n_buckets)
-    raw = F.floor((value - F.lit(lo)) / width)
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(n_buckets - 1))
-
-
-
-def psi_by_partition(df: DataFrame, partition_col: str, value_col: str,
-                     n_buckets: int = 10,
-                     baseline: DataFrame | None = None,
-                     cache_registry: list | None = None,
-                     low_cardinality: bool = False) -> DataFrame:
-    """Population Stability Index of ``value_col`` per partition vs baseline.
-
-    Fixed-width buckets over the baseline's [min, max]; counts smoothed with
-    ``PSI_SMOOTH`` so empty buckets don't blow up the log. Returns
-    ``(partition_id, psi)``. ``cache_registry`` collects persisted
-    intermediates for the caller to unpersist (see :func:`ks_by_partition`).
-
-    ``low_cardinality=True`` (self-baseline only): route through a
-    per-(partition, value) counts frame — ONE scan and one shuffle of
-    O(partitions × distinct values) state; the [min, max] bounds and the
-    baseline histogram both derive from the cached counts, so no second
-    bounds pass over the raw input. Identical math (values are bucketed
-    exactly as rows would be; counts sum). This is the right route for
-    structurally bounded columns — token length is capped by the context
-    size, so its distinct-value count is O(max_seq_len) at ANY corpus
-    scale — while unbounded continuous columns should keep the default
-    two-pass fixed-width path.
-    """
-    if low_cardinality and baseline is None:
-        return _psi_low_cardinality(df, partition_col, value_col, n_buckets,
-                                    cache_registry)
-    base = baseline if baseline is not None else df
     v = F.col(value_col).cast("double")
-
-    # Materialize the 1-row bounds EAGERLY (one map-side-combined min/max
-    # job — parquet column stats make this nearly free) and fold them in as
-    # literals. The previous crossJoin(broadcast(bounds)) formulation was
-    # re-embedded into every downstream branch by AQE replanning, blowing
-    # the audited plan up to 16 scans (BENCH r1→r2 psi regression); with
-    # literal bounds each branch is a plain scan→groupBy that the
-    # part_counts persist dedupes.
-    row = base.agg(F.min(v).alias("lo"), F.max(v).alias("hi")).first()
-    lo, hi = row["lo"], row["hi"]
-
-    def bucketize(frame: DataFrame) -> DataFrame:
-        return frame.withColumn(
-            "bucket",
-            _bucket_expr(F.col(value_col).cast("double"), lo, hi, n_buckets))
-
-    if baseline is None:
-        # Self-baseline in ONE linear plan: the n_buckets bucket counts per
-        # partition are conditional sums in a single map-side-combined
-        # groupBy (the pinned-psi idiom — the shuffle carries n_buckets
-        # longs per partition), and the baseline histogram + grand total
-        # are WINDOW sums over that tiny aggregated frame (#partitions
-        # rows). Two jobs total (bounds + this plan); no grid join, no
-        # persisted intermediate, nothing for concurrent stages to race.
-        bucket = _bucket_expr(v, lo, hi, n_buckets)
-        aggs = [F.sum(F.when(bucket == b, 1).otherwise(0)).alias(f"b{b}")
-                for b in range(n_buckets)]
-        part = df.groupBy(F.col(partition_col).alias("partition_id")) \
-                 .agg(*aggs)
-
-        w_all = Window.partitionBy()          # #partitions rows — trivial
-        n_p = sum((F.col(f"b{b}") for b in range(1, n_buckets)),
-                  F.col("b0"))
-        n_base = F.sum(n_p).over(w_all).cast("double")
-        terms = []
-        for b in range(n_buckets):
-            q_cnt = F.sum(F.col(f"b{b}")).over(w_all)
-            p = (F.col(f"b{b}") + F.lit(PSI_SMOOTH)) / \
-                (n_p + F.lit(PSI_SMOOTH * n_buckets))
-            q = (q_cnt + F.lit(PSI_SMOOTH)) / \
-                (n_base + F.lit(PSI_SMOOTH * n_buckets))
-            terms.append((p - q) * F.log(p / q))
-        psi = sum(terms[1:], terms[0])
-        return part.select("partition_id", psi.alias("psi"))
-
-    part_counts = (
-        bucketize(df)
-        .groupBy(F.col(partition_col).alias("partition_id"), "bucket")
-        .agg(F.count(F.lit(1)).alias("c_p"))
-    )
-    parts = df.select(F.col(partition_col).alias("partition_id")).distinct()
-    base_counts = (
-        bucketize(base)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c_b"))
-    )
-    base_total = base.agg(F.count(F.lit(1)).cast("double").alias("n_base"))
-
-    return _psi_finish(df.sparkSession, parts, part_counts, base_counts,
-                       base_total, n_buckets)
-
-
-def _psi_finish(spark, parts: DataFrame, part_counts: DataFrame,
-                base_counts: DataFrame, base_total: DataFrame,
-                n_buckets: int) -> DataFrame:
-    """Shared PSI tail: full (partition × bucket) grid (so zero-count buckets
-    still get smoothing), smoothed p/q, Σ (p−q)·ln(p/q)."""
-    grid = parts.crossJoin(
-        spark.range(n_buckets).select(F.col("id").alias("bucket")))
-
-    joined = (
-        _pid_nullsafe_join(grid, part_counts, "bucket")
-            .join(F.broadcast(base_counts), ["bucket"], "left")
-            .crossJoin(F.broadcast(base_total))
-            .na.fill({"c_p": 0, "c_b": 0})
-    )
-
-    w_p = Window.partitionBy("partition_id")
-    p = (F.col("c_p") + F.lit(PSI_SMOOTH)) / \
-        (F.sum("c_p").over(w_p) + F.lit(PSI_SMOOTH * n_buckets))
-    q = (F.col("c_b") + F.lit(PSI_SMOOTH)) / \
-        (F.col("n_base") + F.lit(PSI_SMOOTH * n_buckets))
-
-    term = (p - q) * F.log(p / q)
-    return (
-        joined.withColumn("term", term)
-              .groupBy("partition_id")
-              .agg(F.sum("term").alias("psi"))
-    )
-
-
-def _psi_low_cardinality(df: DataFrame, partition_col: str, value_col: str,
-                         n_buckets: int,
-                         cache_registry: list | None) -> DataFrame:
-    """Self-baseline PSI via per-(partition, value) counts — see
-    :func:`psi_by_partition` (``low_cardinality=True``).
-
-    The raw input is scanned exactly once (the counts shuffle); bounds,
-    the per-partition histograms AND the baseline histogram all derive
-    from the cached counts frame, whose size is O(partitions × distinct
-    values) regardless of row count. Bucketing values then summing their
-    counts is algebraically identical to bucketing rows.
-    """
-    v = F.col(value_col).cast("double").alias("v")
-    pvc = (
-        df.select(F.col(partition_col).alias("partition_id"), v)
-          .groupBy("partition_id", "v").agg(F.count(F.lit(1)).alias("c_p"))
-          .persist()
-    )
-    if cache_registry is not None:
-        cache_registry.append(pvc)
-
-    row = pvc.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).first()
-    lo, hi = row["lo"], row["hi"]
-    bucketed = pvc.withColumn(
-        "bucket", _bucket_expr(F.col("v"), lo, hi, n_buckets))
-
-    part_counts = bucketed.groupBy("partition_id", "bucket") \
-                          .agg(F.sum("c_p").alias("c_p"))
-    parts = pvc.select("partition_id").distinct()
-    base_counts = bucketed.groupBy("bucket").agg(F.sum("c_p").alias("c_b"))
-    base_total = pvc.agg(F.sum("c_p").cast("double").alias("n_base"))
-    return _psi_finish(df.sparkSession, parts, part_counts, base_counts,
-                       base_total, n_buckets)
+    b = df.agg(F.min(v).alias("lo"), F.max(v).alias("hi"),
+               F.count(F.lit(1)).alias("n")).collect()[0]
+    lo, hi, n = b["lo"], b["hi"], b["n"]
+    counts = [0] * n_buckets
+    if hi == lo:
+        counts[0] = n
+    else:
+        raw = F.floor((v - F.lit(lo)) / F.lit((hi - lo) / n_buckets))
+        bucket = F.least(F.greatest(raw, F.lit(0)), F.lit(n_buckets - 1))
+        for r in df.groupBy(bucket.alias("b")) \
+                   .agg(F.count(F.lit(1)).alias("c")).collect():
+            counts[r["b"]] = r["c"]
+    return {"lo": lo, "hi": hi, "counts": [float(c) for c in counts],
+            "n_base": float(n)}
 
 
 def _ks_grid_tail(joined: DataFrame) -> DataFrame:
@@ -273,8 +136,7 @@ def ks_by_partition(df: DataFrame, partition_col: str, value_col: str,
     ``bounded=True`` skips the guard (and its blocking distinct-count job)
     entirely — the opt-in for *structurally* bounded columns, where the
     distinct-value count is capped by construction at any corpus scale
-    (token length ≤ context size — the same argument as
-    :func:`psi_by_partition`'s ``low_cardinality``). Unbounded or unknown
+    (token length ≤ context size). Unbounded or unknown
     columns must keep the guard. With no explicit baseline this routes to
     :func:`_ks_bounded_self` — a fully-lazy single linear plan (no persist,
     no grid self-join, no blocking job at all).
@@ -317,8 +179,7 @@ def ks_by_partition(df: DataFrame, partition_col: str, value_col: str,
     # materialize the persisted frames EAGERLY even on the bounded path
     # (where no cardinality probe runs): values/parts/base_counts/rows all
     # branch off them inside ONE downstream job, and concurrent stages each
-    # miss a lazy cache and re-run the raw-scan groupBy (the PSI-histogram
-    # race above)
+    # miss a lazy cache and re-run the raw-scan groupBy
     part_counts.count()
     if base_vcounts is not None:
         base_vcounts.count()
@@ -461,33 +322,6 @@ def _ks_bounded_self(df: DataFrame, partition_col: str, value_col: str,
     if include_rows:
         aggs.append(F.sum("c_p").alias("rows_scanned"))
     return scored.groupBy("partition_id").agg(*aggs)
-
-
-def psi_by_partition_pinned(df: DataFrame, partition_col: str, value_col: str,
-                            lo: float, hi: float, base_counts: list[float],
-                            n_base: float) -> DataFrame:
-    """PSI against a *pinned* histogram baseline (checkpoint/resume path).
-
-    ``base_counts[b]`` are the baseline bucket counts over [lo, hi] fixed-width
-    buckets; the partition histogram is computed in one conditional-sum
-    groupBy (no second scan, no baseline scan at all). Identical math to
-    :func:`psi_by_partition` when the pinned values came from the same data.
-    """
-    nb = len(base_counts)
-    v = F.col(value_col).cast("double")
-    bucket = _bucket_expr(v, lo, hi, nb)
-    aggs = [F.sum(F.when(bucket == b, 1).otherwise(0)).alias(f"b{b}")
-            for b in range(nb)]
-    part = df.groupBy(F.col(partition_col).alias("partition_id")).agg(*aggs)
-
-    n_p = sum((F.col(f"b{b}") for b in range(1, nb)), F.col("b0"))
-    terms = []
-    for b in range(nb):
-        p = (F.col(f"b{b}") + F.lit(PSI_SMOOTH)) / (n_p + F.lit(PSI_SMOOTH * nb))
-        q = F.lit((base_counts[b] + PSI_SMOOTH) / (n_base + PSI_SMOOTH * nb))
-        terms.append((p - q) * F.log(p / q))
-    psi = sum(terms[1:], terms[0])
-    return part.select("partition_id", psi.alias("psi"))
 
 
 def ks_by_partition_counts(df: DataFrame, partition_col: str, value_col: str,

@@ -1,4 +1,5 @@
-"""Scan-fused, fully-lazy execution of the check suite.
+"""Scan-fused, fully-lazy execution of the check suite — the one
+implementation of every aggregate-style check kind.
 
 The naive execution of a suite runs one plan per check — at 100 TB that is one
 full table scan per check (7+ scans). But most check kinds only need
@@ -44,20 +45,19 @@ The pyspark Column DSL costs a socket round trip per operator application
 (plus ~4 more each with call-site capture on, which session.py disables);
 a fused suite plan is a several-thousand-node expression tree, and building
 it node-by-node measured 0.65–1.5 s of pure driver latency — string
-construction is O(1) round trips per frame and parses JVM-side. The
-generated trees are operator-for-operator identical to the old Column
-version (same operand order, same literal values — float literals embedded
-via ``repr`` round-trip exactly), pinned by tests/test_fused.py's
-bit-identity against the per-check path.
+construction is O(1) round trips per frame and parses JVM-side. Float
+literals are embedded via ``repr`` and round-trip exactly (:func:`_d`).
 
 Non-fusible kinds (``unique`` needs a groupBy on the key, ``drift_ks`` needs
 the per-value CDF grid, ``token_invariant`` needs a snapshot join) keep their
 own plans — those shuffles are inherent to their semantics.
 
-Results are bit-identical to the per-check path (asserted in
-tests/test_fused.py); integer aggregates are exact, float aggregates differ
-only in summation order (within the 6-decimal rounding every consumer
-applies).
+DataFrame-valued params (a z-score or PSI ``baseline`` frame, a referential
+``allowed`` frame) never reach the builder: :func:`plain_config` collects
+them into the plain config first. The reference for every kind is an
+independent DuckDB derivation (tests/check_oracle.py and
+``__spark_entry__.oracle_sql()``); integer aggregates match exactly, float
+aggregates within the 6-decimal rounding every consumer applies.
 
 Reference lineage: this is the Spark answer to the reference recomputing its
 stats per detection stage (/root/reference/data_processing/detector.py:149-230
@@ -73,22 +73,58 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyanomalydetector_spark.checks.drift import PSI_SMOOTH
+from pyanomalydetector_spark.checks.drift import PSI_SMOOTH, psi_histogram
+
+FUSIBLE_KINDS = frozenset({"column_stats", "zscore_threshold", "referential",
+                           "n_tok_consistency", "token_range", "drift_psi"})
 
 
 def is_fusible(check) -> bool:
-    """Checks with DataFrame-valued params use the per-check path; plain
-    config (including pinned-baseline scalars) fuses."""
-    k, p = check.kind, check.params
-    if k in ("column_stats", "n_tok_consistency", "token_range"):
-        return True
-    if k == "zscore_threshold":
-        return p.get("baseline") is None
-    if k == "referential":
-        return isinstance(p.get("allowed"), (list, tuple, set))
-    if k == "drift_psi":
-        return p.get("baseline") is None
-    return False
+    return check.kind in FUSIBLE_KINDS
+
+
+# the DataFrame-valued param of each fused kind that accepts one
+_FRAME_PARAM = {"zscore_threshold": "baseline", "drift_psi": "baseline",
+                "referential": "allowed"}
+
+
+def plain_config(check):
+    """``check`` with its DataFrame-valued param collected into the plain
+    config :func:`run_fused` reads, or ``None`` when the check has nothing
+    to score. Checks without such a param pass through untouched (no job).
+
+    - zscore ``baseline`` frame (one ``(mean, std)`` row) → ``baseline_
+      scalars``. A 0-row frame scores nothing (the partition × baseline
+      product is empty), so the check is dropped.
+    - referential ``allowed`` frame → its sorted non-NULL members. A NULL
+      member matches no row (``NULL = NULL`` is not true), so dropping it
+      keeps the anti-join semantics: a NULL value still violates.
+    - psi ``baseline`` frame → ``pinned_hist`` (:func:`psi_histogram`).
+
+    An explicit ``baseline_scalars`` / ``pinned_hist`` wins over a frame.
+    """
+    key = _FRAME_PARAM.get(check.kind)
+    frame = check.params.get(key)
+    if not isinstance(frame, DataFrame):
+        return check
+    p = {k: v for k, v in check.params.items() if k != "baseline"}
+    if check.kind == "referential":
+        col = p.get("column", "source")
+        members = {r[0] for r in frame.select(col).distinct().collect()}
+        p["allowed"] = sorted(members - {None})
+    elif check.kind == "zscore_threshold" and "baseline_scalars" not in p:
+        rows = frame.select("mean", "std").limit(2).collect()
+        if not rows:
+            return None
+        if len(rows) > 1 or None in (rows[0]["mean"], rows[0]["std"]):
+            raise ValueError(f"zscore check {check.check_id!r}: baseline must "
+                             f"be one (mean, std) row without NULLs")
+        p["baseline_scalars"] = {"mean": float(rows[0]["mean"]),
+                                 "std": float(rows[0]["std"])}
+    elif check.kind == "drift_psi" and "pinned_hist" not in p:
+        p["pinned_hist"] = psi_histogram(
+            frame, p.get("value_col", "n_tok"), int(p.get("buckets", 10)))
+    return type(check)(check.check_id, check.kind, p)
 
 
 # ------------------------------------------------- SQL-string construction ----
@@ -180,14 +216,25 @@ def _token_range_elem_pred(lo: int, hi: int) -> str:
 
 def _token_range_bad(p: dict) -> str:
     """Row-level predicate SQL for ``token_range`` — the ONE definition the
-    aggregate and the violations scan both embed (operator-for-operator the
-    tree _check_token_range builds: NULL array → FALSE; the element
-    predicate absorbs NULL elements, so EXISTS is never NULL)."""
+    aggregate and the violations scan both embed (NULL array → FALSE; the
+    element predicate absorbs NULL elements, so EXISTS is never NULL)."""
     col = p.get("value_col", "tokens")
     lo, hi = int(p.get("min_value", 0)), int(p["max_value"])
     return (f"(CASE WHEN {_bt(col)} IS NULL THEN FALSE ELSE "
             f"EXISTS({_bt(col)}, t -> "
             f"{_token_range_elem_pred(lo, hi)}) END)")
+
+
+def _ref_member(p: dict) -> str:
+    """Membership predicate for ``referential``: TRUE for an allowed value,
+    NULL (never TRUE) for a NULL value, so ``CASE WHEN .. THEN`` sends NULL
+    to the violating ELSE branch. An empty allowed set (``IN ()`` does not
+    parse) is FALSE for every row."""
+    allowed = sorted(p["allowed"])
+    if not allowed:
+        return "FALSE"
+    col = _bt(p.get("column", "source"))
+    return f"({col} IN ({', '.join(_lit(a) for a in allowed)}))"
 
 
 def _moment_aggs(vc: str, tag: str) -> list[str]:
@@ -250,7 +297,9 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
         vc = c.params.get("value_col", "n_tok")
         pinned = c.params.get("pinned_hist")
         if pinned is not None:
-            pinned_bounds[vc] = (float(pinned["lo"]), float(pinned["hi"]))
+            # lo = hi = None (no non-NULL baseline value) takes the
+            # degenerate-range branch below: every row in bucket 0
+            pinned_bounds[vc] = (pinned["lo"], pinned["hi"])
         elif vc not in scan_vcs:
             scan_vcs.append(vc)
 
@@ -280,10 +329,8 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             aggs.append(f"SUM(CASE WHEN {_token_range_bad(p)} THEN 1 "
                         f"ELSE 0 END) AS {tag}_bad")
         elif c.kind == "referential":
-            col, allowed = p.get("column", "source"), sorted(p["allowed"])
-            in_list = ", ".join(_lit(a) for a in allowed)
             # NULL→bad: CASE WHEN col IN (...) THEN 0 ELSE 1 (NULL falls to 1)
-            aggs.append(f"SUM(CASE WHEN ({_bt(col)} IN ({in_list})) THEN 0 "
+            aggs.append(f"SUM(CASE WHEN {_ref_member(p)} THEN 0 "
                         f"ELSE 1 END) AS {tag}_bad")
         elif c.kind == "drift_psi":
             vc = p.get("value_col", "n_tok")
@@ -363,8 +410,8 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             vc = p.get("value_col", "n_tok")
             min_count = int(p.get("min_count", 1))
             cnt = f"m_{ctag[vc]}_cnt"
-            # cnt==0 (an all-NULL-value partition) emits NO verdict row,
-            # matching the per-check path (finalize_mean_std drops cnt==0)
+            # cnt==0 (an all-NULL-value partition) emits NO verdict row:
+            # there is no value to count (finalize_mean_std drops cnt==0)
             verdicts.append(verdict_select(
                 pa.filter(f"{cnt} > 0"), c.check_id,
                 passed=f"({cnt} >= {min_count})",
@@ -384,8 +431,7 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             dev = f"ABS(({mean_h}) - ({mean_t}))"
             fail = (f"((({dev}) > {_d(lam)} * ({std_t})) AND (({mean_t}) > 0) "
                     f"AND (TRY_DIVIDE({dev}, {mean_t}) > {_d(rate)}))")
-            # cnt==0 partitions emit no verdict, matching the per-check
-            # path (finalize_mean_std filters cnt>0 before the crossJoin)
+            # cnt==0 partitions emit no verdict: no mean to judge
             pa_z = pa.filter(f"{mtag}_cnt > 0")
             verdicts.append(verdict_select(
                 pa_z, c.check_id,
@@ -434,8 +480,7 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             viol_entries.append((c.check_id, bad, obs,
                                  _sq(f"token id in [{lo}, {hi})")))
         elif c.kind == "referential":
-            col, allowed = p.get("column", "source"), sorted(p["allowed"])
-            in_list = ", ".join(_lit(a) for a in allowed)
+            col = p.get("column", "source")
             bad_n = f"{tag}_bad"
             verdicts.append(verdict_select(
                 pa, c.check_id,
@@ -445,8 +490,7 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             viol_entries.append((
                 c.check_id,
                 # NULL→violation, like the aggregate: IN(...)=NULL falls ELSE
-                f"(CASE WHEN ({_bt(col)} IN ({in_list})) THEN FALSE "
-                f"ELSE TRUE END)",
+                f"(CASE WHEN {_ref_member(p)} THEN FALSE ELSE TRUE END)",
                 f"CAST({_bt(col)} AS STRING)",
                 _sq("member of allowed source set")))
         elif c.kind == "drift_psi":
@@ -473,7 +517,7 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
                 observed=f"({psi})", expected=_d(threshold),
                 threshold=_d(threshold),
                 n_violations="0", rows_scanned="_rows"))
-        else:  # pragma: no cover — guarded by is_fusible
+        else:  # pragma: no cover — guarded by split_fusible
             raise ValueError(f"not fusible: {c.kind}")
 
     # ---- pass 2 plan: one scan emitting every row-level violation ----------

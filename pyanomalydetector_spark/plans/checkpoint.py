@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyanomalydetector_spark.checks.core import (
     Check, CheckResult, run_checks, VERDICT_SCHEMA, VIOLATION_SCHEMA,
 )
+from pyanomalydetector_spark.checks.drift import psi_histogram
 from pyanomalydetector_spark.functions.stats import (
     sufficient_stats, finalize_mean_std,
 )
@@ -348,24 +349,10 @@ def compute_baseline(df: DataFrame, checks: list[Check]) -> tuple[PinnedBaseline
             row = rows[0]
             bl.moments[vc] = {"mean": float(row["mean"]), "std": float(row["std"])}
         elif c.kind == "drift_psi" and vc not in bl.psi:
-            nb = int(c.params.get("buckets", 10))
-            v = F.col(vc).cast("double")
-            b = df.agg(F.min(v).alias("lo"), F.max(v).alias("hi"),
-                       F.count(F.lit(1)).alias("n")).collect()[0]
-            if b["lo"] is None:   # empty input / all-NULL column
+            hist = psi_histogram(df, vc, int(c.params.get("buckets", 10)))
+            if hist["lo"] is None:   # empty input / all-NULL column
                 continue
-            lo, hi = float(b["lo"]), float(b["hi"])
-            if hi == lo:
-                bucket = F.lit(0)
-            else:
-                raw = F.floor((v - F.lit(lo)) / F.lit((hi - lo) / nb))
-                bucket = F.least(F.greatest(raw, F.lit(0)), F.lit(nb - 1))
-            counts = {r["b"]: r["c"] for r in
-                      df.groupBy(bucket.alias("b"))
-                        .agg(F.count(F.lit(1)).alias("c")).collect()}
-            bl.psi[vc] = {"lo": lo, "hi": hi,
-                          "counts": [float(counts.get(i, 0)) for i in range(nb)],
-                          "n_base": float(b["n"])}
+            bl.psi[vc] = hist
         elif c.kind == "drift_ks" and vc not in bl.ks_value_cols:
             bl.ks_value_cols.append(vc)
             ks_counts[vc] = df.select(F.col(vc).cast("double").alias("v")) \

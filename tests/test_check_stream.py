@@ -19,6 +19,15 @@ def seq(spark, sf_dir):
     return load_sequences(spark, sf_dir).persist()
 
 
+def _await_and_stop(q, timeout):
+    """Wait for ``q``; stop it even when it overruns ``timeout``, so an
+    unfinished query cannot hold task slots into later tests."""
+    try:
+        q.awaitTermination(timeout)
+    finally:
+        q.stop()
+
+
 def _suite(seq):
     allowed = sorted(r["source"] for r in seq.select("source").distinct()
                      .filter(F.col("source").rlike("^src[0-9]+$")).collect())
@@ -36,7 +45,7 @@ def test_stream_validates_each_batch(spark, seq, tmp_path):
 
     q = stream_check_suite(spark, inp, seq.schema, runner,
                            str(tmp_path / "ck"))
-    q.awaitTermination(180)
+    _await_and_stop(q, 180)
     v1 = runner.verdicts().collect()
     assert {r["partition_id"] for r in v1} == set(half1)
     batch_ids = {r["batch_id"] for r in v1}
@@ -46,7 +55,7 @@ def test_stream_validates_each_batch(spark, seq, tmp_path):
     seq.filter(F.col("source").isin(half2)).write.mode("append").parquet(inp)
     q = stream_check_suite(spark, inp, seq.schema, runner,
                            str(tmp_path / "ck"))
-    q.awaitTermination(180)
+    _await_and_stop(q, 180)
     v2 = runner.verdicts().collect()
     assert {r["partition_id"] for r in v2} == set(parts)
     assert {r["batch_id"] for r in v2} - batch_ids  # new batch id appeared
@@ -69,7 +78,7 @@ def test_stream_batch_redelivery_noop(spark, seq, tmp_path):
     seq.limit(50).write.parquet(inp)
     runner = StreamingSuiteRunner(spark, str(tmp_path / "store"), _suite(seq))
     q = stream_check_suite(spark, inp, seq.schema, runner, str(tmp_path / "ck"))
-    q.awaitTermination(180)
+    _await_and_stop(q, 180)
     before = runner.verdicts().count()
     runner.apply_batch(seq.limit(50), 0)   # redelivered batch 0
     assert runner.verdicts().count() == before

@@ -15,6 +15,8 @@ from pyanomalydetector_spark.sources.sequences import (
 )
 from pyanomalydetector_spark.checks.core import Check, run_checks, default_suite
 
+from check_oracle import assert_matches_oracle
+
 
 @pytest.fixture(scope="module")
 def seq(spark, sf_dir):
@@ -126,22 +128,6 @@ def test_jsonl_source_equals_parquet_source(spark, sf_dir):
     b = sorted((r["doc_id"], tuple(r["tokens"]), r["n_tok"], r["source"])
                for r in load_sequences_jsonl(spark, sf_dir).collect())
     assert a == b
-
-
-def test_psi_low_cardinality_route_equals_two_pass(spark, seq):
-    """The one-scan value-counts PSI route (for structurally bounded columns
-    like token length) must produce the same statistic as the default
-    two-pass fixed-width path — bucketing values then summing their counts
-    is algebraically identical to bucketing rows."""
-    from pyanomalydetector_spark.checks.drift import psi_by_partition
-    a = {r["partition_id"]: r["psi"]
-         for r in psi_by_partition(seq, "source", "n_tok").collect()}
-    b = {r["partition_id"]: r["psi"]
-         for r in psi_by_partition(seq, "source", "n_tok",
-                                   low_cardinality=True).collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        assert a[k] == pytest.approx(b[k], abs=1e-12), k
 
 
 def test_ks_cardinality_guard_bins_continuous_columns(spark, seq):
@@ -339,10 +325,10 @@ def _null_partition_fixture(spark):
         _SCHEMA)
 
 
-def test_null_partition_scored_not_dropped(spark):
+def test_null_partition_scored_not_dropped(spark, tmp_path):
     """Every check must emit a verdict row for the NULL partition with
     correct counts, and attribute its row-level violations to it — and the
-    fused path must agree with the per-check path on that fixture."""
+    whole suite must agree with the DuckDB oracle on that fixture."""
     df = _null_partition_fixture(spark)
     suite = [
         Check("uniq", "unique", {"key": "doc_id"}),
@@ -358,20 +344,13 @@ def test_null_partition_scored_not_dropped(spark):
     def _key(t):
         return tuple("" if x is None else str(x) for x in t)
 
-    def snap(res):
-        v = sorted(((r["partition_id"], r["check_id"], r["passed"],
-                     round(r["observed"], 9), r["n_violations"],
-                     r["rows_scanned"])
-                    for r in res.verdicts.collect()), key=_key)
-        w = sorted(((r["partition_id"], r["check_id"], r["doc_id"])
-                    for r in res.violations.collect()), key=_key)
-        return v, w
-
-    fused = snap(run_checks(df, suite, fuse=True))
-    percheck = snap(run_checks(df, suite, fuse=False))
-    assert fused == percheck
-
-    verdicts = {(r[0], r[1]): r for r in fused[0]}
+    verdict_rows, violation_rows = assert_matches_oracle(
+        spark, df, suite, tmp_path, "nullpart")
+    verdicts = {(r["partition_id"], r["check_id"]):
+                (r["partition_id"], r["check_id"], r["passed"],
+                 round(r["observed"], 9), r["n_violations"],
+                 r["rows_scanned"])
+                for r in verdict_rows}
     # a verdict row exists for the NULL partition under every check
     for cid in ("uniq", "ref", "ntok", "z", "psi", "ks"):
         assert (None, cid) in verdicts, cid
@@ -386,7 +365,8 @@ def test_null_partition_scored_not_dropped(spark):
     assert math.isfinite(verdicts[(None, "ks")][3])
     assert verdicts[(None, "ks")][5] == 4      # rows_scanned incl. NULL pid
     # row-level violations attribute to the NULL partition
-    viols = fused[1]
+    viols = sorted(((r["partition_id"], r["check_id"], r["doc_id"])
+                    for r in violation_rows), key=_key)
     assert (None, "uniq", "n1") in viols
     assert (None, "ntok", "n2") in viols
     assert {d for p, c, d in viols if c == "ref" and p is None} == \
@@ -582,12 +562,12 @@ def test_unique_digest_prefilter_equals_direct(spark, seq):
                                "salt_buckets": 4})])
 
 
-def test_ntok_consistency_null_metadata_is_a_violation(spark):
+def test_ntok_consistency_null_metadata_is_a_violation(spark, tmp_path):
     """NULL-safety of the metadata invariant: a row where one side is NULL
     and the other isn't CONTRADICTS n_tok == size(tokens) and must count
     (pre-fix, `!=` evaluated to NULL and the row silently PASSED). NULL on
-    both sides is consistent. Pinned on both execution paths — the fused
-    twin shares the predicate."""
+    both sides is consistent. Pinned by hand and against the DuckDB
+    oracle."""
     df = spark.createDataFrame(
         [("a", [1, 2], 2, "s1"),       # consistent
          ("b", [1, 2], None, "s1"),    # NULL declared count → violation
@@ -595,19 +575,13 @@ def test_ntok_consistency_null_metadata_is_a_violation(spark):
          ("d", None, None, "s1"),      # both absent → consistent
          ("e", [1], 9, "s2")],         # plain mismatch → violation
         "doc_id string, tokens array<int>, n_tok int, source string")
-    for fuse in (False, True):
-        checks = [Check("ntok", "n_tok_consistency", {})]
-        if fuse:   # fusion needs a second fusible check to engage
-            checks.append(Check("stats", "column_stats", {"value_col": "n_tok"}))
-        res = run_checks(df, checks, fuse=fuse)
-        viols = {r["doc_id"] for r in res.violations.collect()
-                 if r["check_id"] == "ntok"}
-        assert viols == {"b", "c", "e"}, f"fuse={fuse}: {viols}"
-        verd = {r["partition_id"]: r for r in res.verdicts.collect()
-                if r["check_id"] == "ntok"}
-        assert verd["s1"]["n_violations"] == 2 and not verd["s1"]["passed"]
-        assert verd["s2"]["n_violations"] == 1 and not verd["s2"]["passed"]
-        res.unpersist()
+    verdicts, violations = assert_matches_oracle(
+        spark, df, [Check("ntok", "n_tok_consistency", {})], tmp_path, "ntok")
+    viols = {r["doc_id"] for r in violations if r["check_id"] == "ntok"}
+    assert viols == {"b", "c", "e"}, viols
+    verd = {r["partition_id"]: r for r in verdicts if r["check_id"] == "ntok"}
+    assert verd["s1"]["n_violations"] == 2 and not verd["s1"]["passed"]
+    assert verd["s2"]["n_violations"] == 1 and not verd["s2"]["passed"]
 
 
 def test_salted_unique_is_key_generic(spark):
@@ -629,11 +603,11 @@ def test_salted_unique_is_key_generic(spark):
     salted.unpersist(); plain.unpersist()
 
 
-def test_token_range_semantics_both_routes(spark):
+def test_token_range_semantics_both_routes(spark, tmp_path):
     """token_range: NULL array passes, NULL element violates, out-of-range
     (either side) violates; the violation row carries the FIRST offending
-    element ('NULL' for a NULL element). Pinned identically on the
-    per-check and the fused route."""
+    element ('NULL' for a NULL element). Pinned by hand on the Spark run,
+    which must also match the DuckDB oracle."""
     df = spark.createDataFrame(
         [("a", [1, 2, 3], 3, "s1"),      # in range → pass
          ("b", [1, None, 3], 3, "s1"),   # NULL element → violation ('NULL')
@@ -642,23 +616,18 @@ def test_token_range_semantics_both_routes(spark):
          ("e", [], 0, "s2"),             # empty array → pass
          ("f", [-5, 900], 2, None)],     # NULL partition; first bad is -5
         "doc_id string, tokens array<int>, n_tok int, source string")
-    for fuse in (False, True):
-        checks = [Check("tr", "token_range", {"max_value": 800})]
-        if fuse:   # fusion needs a second fusible check to engage
-            checks.append(Check("stats", "column_stats", {"value_col": "n_tok"}))
-        res = run_checks(df, checks, fuse=fuse)
-        viols = {(r["doc_id"], r["observed"], r["expected"])
-                 for r in res.violations.collect() if r["check_id"] == "tr"}
-        assert viols == {("b", "NULL", "token id in [0, 800)"),
-                         ("c", "900", "token id in [0, 800)"),
-                         ("f", "-5", "token id in [0, 800)")}, \
-            f"fuse={fuse}: {viols}"
-        verd = {r["partition_id"]: r for r in res.verdicts.collect()
-                if r["check_id"] == "tr"}
-        assert verd["s1"]["n_violations"] == 1 and not verd["s1"]["passed"]
-        assert verd["s2"]["n_violations"] == 1 and verd["s2"]["rows_scanned"] == 3
-        assert verd[None]["n_violations"] == 1      # NULL partition kept
-        res.unpersist()
+    verdicts, violations = assert_matches_oracle(
+        spark, df, [Check("tr", "token_range", {"max_value": 800})],
+        tmp_path, "tr")
+    viols = {(r["doc_id"], r["observed"], r["expected"])
+             for r in violations if r["check_id"] == "tr"}
+    assert viols == {("b", "NULL", "token id in [0, 800)"),
+                     ("c", "900", "token id in [0, 800)"),
+                     ("f", "-5", "token id in [0, 800)")}, viols
+    verd = {r["partition_id"]: r for r in verdicts if r["check_id"] == "tr"}
+    assert verd["s1"]["n_violations"] == 1 and not verd["s1"]["passed"]
+    assert verd["s2"]["n_violations"] == 1 and verd["s2"]["rows_scanned"] == 3
+    assert verd[None]["n_violations"] == 1      # NULL partition kept
 
 
 def test_token_range_min_bound_and_all_pass(spark):

@@ -1,4 +1,5 @@
-"""Adversarial randomized inputs: fused ≡ per-check on arbitrary tables.
+"""Adversarial randomized inputs: the check suite ≡ the DuckDB oracle on
+arbitrary tables.
 
 test_fused.py pins the invariant on the curated fixtures; this module throws
 seeded-random garbage at the same contract — NULL doc_ids, NULL sources (a
@@ -13,6 +14,8 @@ import numpy as np
 import pytest
 
 from pyanomalydetector_spark.checks.core import Check, run_checks, default_suite
+
+from check_oracle import assert_matches_oracle
 
 SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 ALLOWED = ["s1", "s2"]                     # s3 / "weird src" / NULL violate
@@ -58,54 +61,39 @@ def _null_safe_key(t):
     return tuple((x is None, x) for x in t)
 
 
-def _norm_verdicts(df):
-    rows = [
+def _norm_verdicts(rows):
+    return sorted((
         (r["partition_id"], r["check_id"], r["passed"],
          round(r["observed"], 6) if r["observed"] is not None else None,
          round(r["expected"], 6) if r["expected"] is not None else None,
          round(r["threshold"], 6) if r["threshold"] is not None else None,
          r["n_violations"], r["rows_scanned"])
-        for r in df.collect()]
-    return sorted(rows, key=_null_safe_key)
-
-
-def _norm_violations(df):
-    return sorted((tuple(r) for r in df.collect()), key=_null_safe_key)
+        for r in rows), key=_null_safe_key)
 
 
 @pytest.mark.parametrize("seed", [7, 19, 1031])
-def test_fused_eq_per_check_on_random_tables(spark, seed):
+def test_fused_eq_per_check_on_random_tables(spark, tmp_path, seed):
     df = spark.createDataFrame(_random_rows(seed), SCHEMA)
-    # default suite + token_range (fusible): the bounds slice the
-    # generator's [0, 1000) id range on both ends, and the injected NULL /
+    # default suite + token_range: the bounds slice the generator's
+    # [0, 1000) id range on both ends, and the injected NULL /
     # out-of-window elements violate
     suite = default_suite(ALLOWED) + [
         Check("token_range_ids", "token_range",
               {"min_value": 50, "max_value": 800})]
-    fused = run_checks(df, suite, fuse=True)
-    plain = run_checks(df, suite, fuse=False)
+    verdicts, _ = assert_matches_oracle(spark, df, suite, tmp_path,
+                                        f"rand{seed}")
+    # the run is also self-deterministic: a second pass agrees
+    again = run_checks(
+        spark.read.parquet(str(tmp_path / f"rand{seed}.parquet")), suite)
     try:
-        assert _norm_verdicts(fused.verdicts) == _norm_verdicts(plain.verdicts)
-        assert _norm_violations(fused.violations) == \
-            _norm_violations(plain.violations)
-        # the run is also self-deterministic: a second fused pass agrees
-        again = run_checks(df, suite, fuse=True)
-        assert _norm_verdicts(again.verdicts) == _norm_verdicts(fused.verdicts)
+        assert _norm_verdicts(again.verdicts.collect()) == \
+            _norm_verdicts(verdicts)
+    finally:
         again.unpersist()
-    finally:
-        fused.unpersist()
-        plain.unpersist()
 
 
-def test_checks_on_empty_table(spark):
+def test_checks_on_empty_table(spark, tmp_path):
     df = spark.createDataFrame([], SCHEMA)
-    suite = default_suite(ALLOWED)
-    fused = run_checks(df, suite, fuse=True)
-    plain = run_checks(df, suite, fuse=False)
-    try:
-        assert _norm_verdicts(fused.verdicts) == _norm_verdicts(plain.verdicts)
-        assert fused.violations.count() == 0
-        assert plain.violations.count() == 0
-    finally:
-        fused.unpersist()
-        plain.unpersist()
+    verdicts, violations = assert_matches_oracle(
+        spark, df, default_suite(ALLOWED), tmp_path, "empty")
+    assert verdicts == [] and violations == []

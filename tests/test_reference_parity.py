@@ -35,8 +35,10 @@ ITEM_IDS = [59888, 93281, 94003, 110309, 141917, 217822, 236160, 217825,
 T0 = 1739505598 - 3600 * 24 * 3              # trends-stats build time
 ENDEP = 1739505598 - 600 * 18                # detection time
 
-pytestmark = pytest.mark.skipif(not os.path.isdir(FIX),
-                                reason="reference fixture not present")
+# only the tests that read FIX need the reference checkout; the golden
+# vectors and the resample equivalence use inline literals
+needs_fixture = pytest.mark.skipif(not os.path.isdir(FIX),
+                                   reason="reference fixture not present")
 
 
 def test_fit_walk_matches_reference_golden_vectors():
@@ -97,6 +99,7 @@ def _pandas_detect1_oracle():
     return sorted(set(j["itemid"].tolist()))
 
 
+@needs_fixture
 def test_detect1_on_reference_fixture(spark):
     history = read_metrics_csv(
         spark, os.path.join(FIX, "history.csv.gz"), HISTORY_SCHEMA,
@@ -173,6 +176,7 @@ def _pandas_detect2_oracle(spark, survivors):
     return sorted(out)
 
 
+@needs_fixture
 def test_detect2_on_reference_fixture(spark):
     from pyanomalydetector_spark.operators.detect import detect2
     survivors = _pandas_detect1_oracle()
@@ -198,6 +202,7 @@ def test_detect2_on_reference_fixture(spark):
     assert ours == _pandas_detect2_oracle(spark, survivors)
 
 
+@needs_fixture
 def test_two_stage_dbscan_reference_golden(spark):
     """The reference's dbscan golden test (tests/test_dbscan.py:31-43):
     11 items at endep=1739505598 must yield exactly 2 clusters of sizes
@@ -371,6 +376,7 @@ def _load_detect3_fixture(spark, endep3, t_start, startep2):
     return cache_sdf, cache, env_sdf, env
 
 
+@needs_fixture
 def test_detect4_on_reference_fixture(spark):
     """detect4 ≡ detect3(is_long_trend=True) (detect_anomalies.py:109-113,
     detector.py:562-570): same cascade, long_trends_retention window and its
@@ -409,6 +415,7 @@ def test_detect4_on_reference_fixture(spark):
     assert saw_nonempty
 
 
+@needs_fixture
 def test_detect1_plus_detect4_cascade_reference(spark):
     """The reference's detect1+detect4 combo (tests/test_detector_all.py:10-12,
     detection_stages=[STAGE_DETECT1, STAGE_DETECT4]) through detect_cascade
@@ -459,6 +466,7 @@ def test_detect1_plus_detect4_cascade_reference(spark):
     assert ours == expected
 
 
+@needs_fixture
 def test_detect3_on_reference_fixture(spark):
     from pyanomalydetector_spark.operators.detect import detect3
     items = sorted(ITEM_IDS)

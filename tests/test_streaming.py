@@ -22,6 +22,15 @@ from pyanomalydetector_spark.streaming.incremental import (
 SCHEMA = "itemid string, clock long, value double"
 
 
+def _await_and_stop(q, timeout):
+    """Wait for ``q``; stop it even when it overruns ``timeout``, so an
+    unfinished query cannot hold task slots into later tests."""
+    try:
+        q.awaitTermination(timeout)
+    finally:
+        q.stop()
+
+
 def _write_chunk(spark, path, rows):
     spark.createDataFrame(rows, SCHEMA).coalesce(1) \
          .write.mode("append").parquet(path)
@@ -39,7 +48,7 @@ def test_streaming_stats_equals_batch(spark, tmp_path):
 
     state = StreamingStatsState(spark, str(tmp_path / "state"), ["itemid"])
     q = stream_stats_update(spark, inp, SCHEMA, state, str(tmp_path / "ck"))
-    q.awaitTermination(120)
+    _await_and_stop(q, 120)
 
     batch = finalize_mean_std(
         sufficient_stats(spark.read.parquet(inp), ["itemid"], "value"))
@@ -49,7 +58,7 @@ def test_streaming_stats_equals_batch(spark, tmp_path):
     rows2 = [(f"k{i % 4}", c, float(i + c)) for i in range(4) for c in range(5)]
     _write_chunk(spark, inp, rows2)
     q2 = stream_stats_update(spark, inp, SCHEMA, state, str(tmp_path / "ck"))
-    q2.awaitTermination(120)
+    _await_and_stop(q2, 120)
 
     batch2 = finalize_mean_std(
         sufficient_stats(spark.read.parquet(inp), ["itemid"], "value"))
@@ -61,7 +70,7 @@ def test_batch_redelivery_is_idempotent(spark, tmp_path):
     _write_chunk(spark, inp, [("a", 1, 2.0), ("a", 2, 4.0), ("b", 1, 1.0)])
     state = StreamingStatsState(spark, str(tmp_path / "state"), ["itemid"])
     q = stream_stats_update(spark, inp, SCHEMA, state, str(tmp_path / "ck"))
-    q.awaitTermination(120)
+    _await_and_stop(q, 120)
     before = _norm(state.stats())
 
     # redeliver batch 0 manually — must be a no-op
@@ -84,7 +93,7 @@ def test_streaming_rollup_equals_batch_rollup(spark, sf_dir, tmp_path):
                .format("parquet").option("path", out)
                .option("checkpointLocation", str(tmp_path / "ck"))
                .trigger(availableNow=True).start())
-    q.awaitTermination(180)
+    _await_and_stop(q, 180)
 
     got = spark.read.parquet(out)
     expected = tumbling_rollup(
@@ -134,7 +143,7 @@ def test_applyinpandaswithstate_running_stats(spark, tmp_path):
                 .outputMode("update")
                 .option("checkpointLocation", str(tmp_path / "ck"))
                 .trigger(availableNow=True).start())
-        q.awaitTermination(180)
+        _await_and_stop(q, 180)
 
     drain()
     spark.createDataFrame(rows2, schema).coalesce(1) \
@@ -180,7 +189,7 @@ def test_stateful_idle_timeout_evicts_and_restarts(spark, tmp_path):
                 .outputMode("update")
                 .option("checkpointLocation", str(tmp_path / "ck"))
                 .trigger(availableNow=True).start())
-        q.awaitTermination(180)
+        _await_and_stop(q, 180)
 
     # batch 1: key 1 sees 3 rows
     spark.createDataFrame([(1, c, float(c)) for c in range(3)], schema) \
@@ -244,7 +253,7 @@ def test_transformwithstate_running_stats(spark, tmp_path):
                     .outputMode("update")
                     .option("checkpointLocation", str(tmp_path / "ck"))
                     .trigger(availableNow=True).start())
-            q.awaitTermination(180)
+            _await_and_stop(q, 180)
 
         drain()
         spark.createDataFrame(rows2, schema).coalesce(1) \

@@ -11,6 +11,7 @@ every check does real work. ``source`` is deliberately skewed (src0 holds
 ~20% of rows) to exercise the salted/AQE skew handling.
 
 Usage:  python tools/scaling_bench.py [n_rows]
+        python tools/scaling_bench.py --run <cores> <n_rows>   (one sample)
 Writes BENCH_SCALING.json and prints one JSON line.
 """
 
@@ -97,6 +98,11 @@ def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--gen":
         generate(N_ROWS)
         return
+
+    # --run without the rows argument would read the core count as the row
+    # count and generate a fixture of that many rows
+    if sys.argv[1:2] == ["--run"] and len(_pos) < 2:
+        sys.exit("usage: scaling_bench.py --run <cores> <n_rows>")
 
     # Regenerate a missing fixture (fixtures under data/ are disposable and
     # --run used to crash when one had been cleaned away) — in a SUBPROCESS,
