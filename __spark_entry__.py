@@ -33,7 +33,6 @@ from pyanomalydetector_spark.functions.stats import (  # noqa: E402
 from pyanomalydetector_spark.checks.core import (  # noqa: E402
     Check, run_checks, default_suite,
 )
-from pyanomalydetector_spark.checks.drift import ks_by_partition  # noqa: E402
 from pyanomalydetector_spark.operators.detect import (  # noqa: E402
     DetectorConfig, detect1, detect2, adjacent_diff_stats, local_peaks,
 )
@@ -312,15 +311,13 @@ def _q_seq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_seq_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample KS D of per-partition n_tok distribution vs baseline.
-
-    ``bounded=True``: n_tok is structurally capped by the context size, so
-    this runs the fully-lazy single-plan route (no cardinality-guard job,
-    no grid self-join) — the oracle still computes the dense-grid max,
-    pinning the left/right-limit candidate formulation against it."""
+    """Two-sample KS D of per-partition n_tok distribution vs whole-table
+    baseline: the drift_ks check alone. The oracle computes the dense-grid
+    max, pinning the engine's left/right-limit candidate plan against it."""
     seq = load_sequences(spark, sf_dir)
-    return ks_by_partition(seq, "source", "n_tok", bounded=True) \
-        .select("partition_id", F.round("ks_d", 6).alias("ks_d"))
+    res = run_checks(seq, [Check("ks", "drift_ks", {"value_col": "n_tok"})])
+    return res.verdicts.select("partition_id",
+                               F.round("observed", 6).alias("ks_d"))
 
 
 # ------------------------------------------------- events detector ops ----

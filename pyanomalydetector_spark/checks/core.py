@@ -62,7 +62,7 @@ from pyspark.sql.types import (
 )
 
 from pyanomalydetector_spark.checks.drift import (
-    ks_by_partition, ks_by_partition_counts,
+    ks_by_partition, ks_value_counts,
 )
 
 VERDICT_SCHEMA = StructType([
@@ -95,10 +95,10 @@ class Check:
 class CheckResult:
     verdicts: DataFrame
     violations: DataFrame
-    # frames persisted while building the plans (fused aggregates, KS count
-    # grids). Long-lived sessions (streaming micro-batches) must call
-    # unpersist() once verdicts/violations are materialized, or cached frames
-    # accumulate until LRU eviction.
+    # frames persisted while building the plans (fused aggregates, unique's
+    # per-partition rollup). Long-lived sessions (streaming micro-batches)
+    # must call unpersist() once verdicts/violations are materialized, or
+    # cached frames accumulate until LRU eviction.
     cached: tuple = ()
 
     def unpersist(self) -> None:
@@ -114,9 +114,9 @@ class CheckResult:
         each recompute the whole subtree (the documented lazy-persist
         race), whereas after eager materialization both are cache hits.
         The cached frames themselves are INDEPENDENT plans (fused
-        aggregates, unique's per-partition rollup, KS grids), so their
-        first counts run concurrently too — each frame is counted by
-        exactly one thread, which is race-free, and the suite's heavy
+        aggregates, unique's per-partition rollup), so their first counts
+        run concurrently too — each frame is counted by exactly one
+        thread, which is race-free, and the suite's heavy
         shuffles overlap instead of queueing (measured 53 s → ~44 s at
         local[4]/32M rows).
         """
@@ -136,11 +136,6 @@ class CheckResult:
 
 def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
     return spark.createDataFrame([], schema)
-
-
-def _rows_per_partition(df: DataFrame, pcol: str) -> DataFrame:
-    return df.groupBy(F.col(pcol).alias("partition_id")) \
-             .agg(F.count(F.lit(1)).alias("rows_scanned"))
 
 
 def _finish_verdicts(v: DataFrame) -> DataFrame:
@@ -544,27 +539,11 @@ def _check_token_invariant(df: DataFrame, check: Check, pcol: str) -> CheckResul
 def _check_drift_ks(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     value_col = check.params.get("value_col", "n_tok")
     threshold = float(check.params.get("threshold", 0.2))
-    cache_registry: list = []
-
+    # pinned counts win; an explicit baseline frame is reduced lazily
     base_counts = check.params.get("baseline_counts")
-    if base_counts is not None:
-        scored = ks_by_partition_counts(df, pcol, value_col, base_counts)
-        # NULL-SAFE: keep the NULL partition's verdict row
-        rows = _rows_per_partition(df, pcol).withColumnRenamed(
-            "partition_id", "_rp")
-        scored = scored.join(
-            rows, scored["partition_id"].eqNullSafe(rows["_rp"])).drop("_rp")
-    else:
-        scored = ks_by_partition(
-            df, pcol, value_col, baseline=check.params.get("baseline"),
-            cache_registry=cache_registry,
-            # structurally bounded columns (token length ≤ context size)
-            # skip the cardinality guard's blocking job and run the
-            # fully-lazy single-plan route
-            bounded=bool(check.params.get("bounded", False)),
-            # rows_scanned derives from the counts shuffle — saves a second
-            # raw-input scan
-            include_rows=True)
+    if base_counts is None and check.params.get("baseline") is not None:
+        base_counts = ks_value_counts(check.params["baseline"], value_col)
+    scored = ks_by_partition(df, pcol, value_col, base_counts)
     verdicts = scored.select(
         "partition_id",
         F.lit(check.check_id).alias("check_id"),
@@ -576,8 +555,7 @@ def _check_drift_ks(df: DataFrame, check: Check, pcol: str) -> CheckResult:
         F.col("rows_scanned"),
     )
     return CheckResult(_finish_verdicts(verdicts),
-                       _empty(df.sparkSession, VIOLATION_SCHEMA),
-                       cached=tuple(cache_registry))
+                       _empty(df.sparkSession, VIOLATION_SCHEMA))
 
 
 # kinds with their own plans; the aggregate kinds are built by checks/fused.py
@@ -667,9 +645,6 @@ def default_suite(allowed_sources: Iterable[str]) -> list[Check]:
         Check("n_tok_consistency", "n_tok_consistency", {}),
         Check("drift_psi_n_tok", "drift_psi",
               {"value_col": "n_tok", "buckets": 10, "threshold": 0.25}),
-        # bounded: token length is structurally capped by the context size,
-        # so the KS cardinality guard (a blocking distinct-count job) is
-        # provably unnecessary → single-plan route
         Check("drift_ks_n_tok", "drift_ks",
-              {"value_col": "n_tok", "threshold": 0.35, "bounded": True}),
+              {"value_col": "n_tok", "threshold": 0.35}),
     ]

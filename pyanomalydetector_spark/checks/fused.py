@@ -49,8 +49,8 @@ construction is O(1) round trips per frame and parses JVM-side. Float
 literals are embedded via ``repr`` and round-trip exactly (:func:`_d`).
 
 Non-fusible kinds (``unique`` needs a groupBy on the key, ``drift_ks`` needs
-the per-value CDF grid, ``token_invariant`` needs a snapshot join) keep their
-own plans — those shuffles are inherent to their semantics.
+per-value cumulative windows, ``token_invariant`` needs a snapshot join) keep
+their own plans — those shuffles are inherent to their semantics.
 
 DataFrame-valued params (a z-score or PSI ``baseline`` frame, a referential
 ``allowed`` frame) never reach the builder: :func:`plain_config` collects

@@ -42,7 +42,9 @@ from pyspark.sql import functions as F
 from pyanomalydetector_spark.checks.core import (
     Check, CheckResult, run_checks, VERDICT_SCHEMA, VIOLATION_SCHEMA,
 )
-from pyanomalydetector_spark.checks.drift import psi_histogram
+from pyanomalydetector_spark.checks.drift import (
+    ks_value_counts, psi_histogram,
+)
 from pyanomalydetector_spark.functions.stats import (
     sufficient_stats, finalize_mean_std,
 )
@@ -355,8 +357,7 @@ def compute_baseline(df: DataFrame, checks: list[Check]) -> tuple[PinnedBaseline
             bl.psi[vc] = hist
         elif c.kind == "drift_ks" and vc not in bl.ks_value_cols:
             bl.ks_value_cols.append(vc)
-            ks_counts[vc] = df.select(F.col(vc).cast("double").alias("v")) \
-                              .groupBy("v").agg(F.count(F.lit(1)).alias("c_b"))
+            ks_counts[vc] = ks_value_counts(df, vc)
     return bl, ks_counts
 
 

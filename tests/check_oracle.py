@@ -32,9 +32,13 @@ Modeled semantics (partition = ``partition_col``):
   or a baseline frame); a NULL value lands in bucket 0 (null-skipping
   greatest); degenerate range (hi == lo, or no non-NULL baseline value) →
   everything in bucket 0.
-- KS (self-baseline): NULL values carry no mass; an all-NULL partition
-  scores NaN, and NaN <= threshold is false (Spark NaN orders greater than
-  any double), so it FAILS. Derived with the dense-grid formula.
+- KS: the baseline is the input itself, a baseline frame, or pinned
+  ``(v, c_b)`` counts. Derived with the dense-grid formula over the union
+  of baseline and input values (``c_b = 0`` where the baseline has no
+  mass). NULL values carry no mass on either side; an all-NULL partition
+  or a baseline without a non-NULL value scores NaN, and NaN <= threshold
+  is false (Spark NaN orders greater than any double), so it FAILS.
+  rows_scanned counts every row, NULL values included.
 """
 
 import math
@@ -174,31 +178,37 @@ def _psi(seq, p, c, rels) -> str:
                            _d(thr), _d(thr), 0, "n_p", "FROM sc")
 
 
-def _ks(seq, p, c) -> str:
-    if c.params.get("baseline") is not None \
-            or c.params.get("baseline_counts") is not None:
-        raise NotImplementedError("oracle models self-baseline KS only")
+def _ks(seq, p, c, rels) -> str:
     v = _qi(c.params.get("value_col", "n_tok"))
     thr = float(c.params.get("threshold", 0.2))
+    counts, base = c.params.get("baseline_counts"), c.params.get("baseline")
+    if counts is not None:
+        kb = (f"SELECT CAST(v AS DOUBLE) AS v, SUM(c_b) AS c_b "
+              f"FROM {rels[id(counts)]} WHERE v IS NOT NULL GROUP BY 1")
+    else:
+        src = rels[id(base)] if base is not None else seq
+        kb = (f"SELECT CAST({v} AS DOUBLE) AS v, COUNT(*) AS c_b "
+              f"FROM {src} WHERE {v} IS NOT NULL GROUP BY 1")
     body = (
-        f"WITH kvals AS (SELECT DISTINCT CAST({v} AS DOUBLE) AS v "
+        f"WITH kb AS ({kb}), "
+        f"kvals AS (SELECT v FROM kb UNION SELECT CAST({v} AS DOUBLE) "
         f"FROM {seq} WHERE {v} IS NOT NULL), "
         f"kpc AS (SELECT {p} AS pid, CAST({v} AS DOUBLE) AS v, "
         f"COUNT(*) AS c_p FROM {seq} WHERE {v} IS NOT NULL GROUP BY 1, 2), "
-        f"kbc AS (SELECT v, SUM(c_p) AS c_b FROM kpc GROUP BY v), "
-        f"knb AS (SELECT COUNT({v}) AS n_base FROM {seq}), "
-        f"kj AS (SELECT g.pid, g.v, COALESCE(kpc.c_p, 0) AS c_p, kbc.c_b "
+        f"knb AS (SELECT COALESCE(SUM(c_b), 0) AS n_base FROM kb), "
+        f"kj AS (SELECT g.pid, g.v, COALESCE(kpc.c_p, 0) AS c_p, "
+        f"COALESCE(kb.c_b, 0) AS c_b "
         f"FROM (SELECT s.pid, k.v FROM (SELECT DISTINCT {p} AS pid "
         f"FROM {seq}) s, kvals k) g "
         f"LEFT JOIN kpc ON g.pid IS NOT DISTINCT FROM kpc.pid "
-        f"AND g.v = kpc.v JOIN kbc ON g.v = kbc.v), "
+        f"AND g.v = kpc.v LEFT JOIN kb ON g.v = kb.v), "
         f"kd AS (SELECT pid, MAX(ABS(CAST(cum_p AS DOUBLE) / n_p "
         f"- CAST(cum_b AS DOUBLE) / n_base)) AS d "
         f"FROM (SELECT kj.pid, kj.v, "
         f"SUM(c_p) OVER (PARTITION BY kj.pid ORDER BY kj.v) AS cum_p, "
         f"SUM(c_p) OVER (PARTITION BY kj.pid) AS n_p, "
         f"SUM(c_b) OVER (PARTITION BY kj.pid ORDER BY kj.v) AS cum_b, "
-        f"n_base FROM kj, knb) WHERE n_p > 0 GROUP BY pid), "
+        f"n_base FROM kj, knb) WHERE n_p > 0 AND n_base > 0 GROUP BY pid), "
         f"rows_pp AS (SELECT {p} AS pid, COUNT(*) AS nrows "
         f"FROM {seq} GROUP BY 1) ")
     return body + _verdict(
@@ -270,7 +280,7 @@ def _check_sql(seq: str, p: str, c, rels: dict) -> tuple[str, str | None]:
     if k == "drift_psi":
         return _psi(seq, p, c, rels), None
     if k == "drift_ks":
-        return _ks(seq, p, c), None
+        return _ks(seq, p, c, rels), None
     raise NotImplementedError(k)
 
 

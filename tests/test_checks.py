@@ -130,125 +130,98 @@ def test_jsonl_source_equals_parquet_source(spark, sf_dir):
     assert a == b
 
 
-def test_ks_cardinality_guard_bins_continuous_columns(spark, seq):
-    """Pointing KS at a continuous double column must not build a
-    #distinct ≈ #rows grid: above max_grid_values the values re-bin into
-    fixed-width bins derived from the cached counts (no raw re-scan), and
-    the binned statistic stays close to the exact one (histogram
-    approximation, error bounded by per-bin mass)."""
-    from pyanomalydetector_spark.checks.drift import ks_by_partition
-    # deterministic "continuous" column: n_tok + hash-derived fraction →
-    # essentially every row a distinct double
-    cont = seq.withColumn(
-        "x", F.col("n_tok")
-             + F.pmod(F.xxhash64("doc_id"), F.lit(100_000)) / 100_000.0)
-    exact = {r["partition_id"]: r["ks_d"]
-             for r in ks_by_partition(cont, "source", "x").collect()}
-    binned = {r["partition_id"]: r["ks_d"]
-              for r in ks_by_partition(cont, "source", "x",
-                                       max_grid_values=50,
-                                       n_fallback_bins=256).collect()}
-    assert exact.keys() == binned.keys()
-    for k in exact:
-        assert 0.0 <= binned[k] <= 1.0
-        # 256 bins over this range keep the histogram close to exact
-        assert abs(exact[k] - binned[k]) < 0.1, k
-
-    # NULL values must drop out of the binned path exactly as they do in
-    # the unbinned one (least/greatest skip nulls — a naive bin expression
-    # would sweep null mass into the top bin)
-    cont_n = cont.withColumn(
-        "x", F.when(F.pmod(F.xxhash64("doc_id"), F.lit(5)) == 0,
-                    F.lit(None).cast("double")).otherwise(F.col("x")))
-    e2 = {r["partition_id"]: r["ks_d"]
-          for r in ks_by_partition(cont_n, "source", "x").collect()}
-    b2 = {r["partition_id"]: r["ks_d"]
-          for r in ks_by_partition(cont_n, "source", "x", max_grid_values=50,
-                                   n_fallback_bins=256).collect()}
-    for k in e2:
-        assert abs(e2[k] - b2[k]) < 0.1, k
-
-    # explicit-baseline side must trip the guard too: a continuous
-    # high-cardinality baseline would otherwise rebuild the degenerate grid
-    bl = {r["partition_id"]: r["ks_d"]
-          for r in ks_by_partition(cont, "source", "x", baseline=cont,
-                                   max_grid_values=50,
-                                   n_fallback_bins=256).collect()}
-    for k in exact:
-        # baseline == the same rows ⇒ same statistic as self-baseline
-        assert abs(exact[k] - bl[k]) < 0.1, k
-
-
-def test_ks_bounded_single_plan_equals_grid(spark, seq):
-    """``bounded=True`` (self-baseline) routes KS through the fully-lazy
-    single linear plan — no dense grid, no persist, no blocking guard job.
-    Its left/right-limit candidate evaluation must reproduce the dense-grid
-    maximum bit-for-bit (same long/long→double arithmetic on the same
-    integer cumulative sums), and ``include_rows`` must count NULL-value
-    rows exactly like a raw count(*) per partition."""
-    from pyanomalydetector_spark.checks.drift import ks_by_partition
-
-    a = {r["partition_id"]: r["ks_d"]
-         for r in ks_by_partition(seq, "source", "n_tok").collect()}
-    b = {r["partition_id"]: (r["ks_d"], r["rows_scanned"])
-         for r in ks_by_partition(seq, "source", "n_tok", bounded=True,
-                                  include_rows=True).collect()}
-    raw_rows = {r["source"]: r["cnt"]
-                for r in seq.groupBy("source")
-                            .agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        assert a[k] == b[k][0], k          # bit-identical, not approx
-        assert b[k][1] == raw_rows[k], k
-
-    # NULL values carry no mass in the statistic but DO count in
-    # rows_scanned — identical to the grid path + raw count
-    seq_n = seq.withColumn(
-        "n_tok", F.when(F.pmod(F.xxhash64("doc_id"), F.lit(7)) == 0,
-                        F.lit(None).cast("int")).otherwise(F.col("n_tok")))
-    e = {r["partition_id"]: r["ks_d"]
-         for r in ks_by_partition(seq_n, "source", "n_tok").collect()}
-    g = {r["partition_id"]: (r["ks_d"], r["rows_scanned"])
-         for r in ks_by_partition(seq_n, "source", "n_tok", bounded=True,
-                                  include_rows=True).collect()}
-    assert e.keys() == g.keys()
-    for k in e:
-        assert e[k] == g[k][0], k
-        assert g[k][1] == raw_rows[k], k
-
-
 @pytest.mark.parametrize("seed", [0, 1, 2, 3])
 def test_ks_bounded_matches_numpy_ecdf(spark, seed):
-    """Semantic pin, independent of the grid implementation: the bounded KS
-    statistic equals the textbook two-sample KS-D — max over the combined
-    support of |ECDF_partition − ECDF_pooled| — computed with numpy on
-    deterministic hash-synthesized fixtures (varying partition counts,
-    duplicated values, integer supports with gaps)."""
+    """Semantic pin, independent of any grid implementation: KS equals the
+    textbook two-sample KS-D — max over the combined support of
+    |ECDF_partition − ECDF_baseline| — computed with numpy on deterministic
+    hash-synthesized fixtures (varying partition counts, duplicated values,
+    integer supports with gaps), for three inputs: the integer column
+    against itself, a continuous double column (#distinct ≈ #rows) against
+    itself, and the integer column against an explicit baseline whose
+    support only partly overlaps it. NULL values carry no mass but count in
+    ``rows_scanned``; a NULL partition key is scored like any other."""
     import hashlib
     import numpy as np
-    from pyanomalydetector_spark.checks.drift import ks_by_partition
+    from pyanomalydetector_spark.checks.drift import (
+        ks_by_partition, ks_value_counts)
 
-    def h(i: int) -> int:
+    def h(i: int, salt: str = "") -> int:
         return int.from_bytes(
-            hashlib.md5(f"{seed}:{i}".encode()).digest()[:4], "big")
+            hashlib.md5(f"{salt}{seed}:{i}".encode()).digest()[:4], "big")
 
     n = 400 + seed * 137
     rows = [(f"p{h(i) % (2 + seed)}", (h(i) >> 8) % (5 + 7 * seed))
             for i in range(n)]
-    df = spark.createDataFrame(rows, "source string, n_tok int")
+    rows += [("p0", None), ("p1", None), (None, 3), (None, None)]
+    cont = [(p, None if x is None else x + (h(i, "c") % 100_000) / 100_000.0)
+            for i, (p, x) in enumerate(rows)]
+    base_rows = [(None, (h(i, "b") >> 8) % (9 + 5 * seed) + 2)
+                 for i in range(150 + seed * 40)] + [(None, None)]
 
-    got = {r["partition_id"]: r["ks_d"]
-           for r in ks_by_partition(df, "source", "n_tok",
-                                    bounded=True).collect()}
+    def numpy_ks(data, baseline):
+        pooled = np.sort(np.array([v for _, v in baseline if v is not None],
+                                  dtype=float))
+        out = {}
+        for part in {p for p, _ in data}:
+            xs = np.sort(np.array([v for p, v in data
+                                   if p == part and v is not None],
+                                  dtype=float))
+            support = np.union1d(pooled, xs)
+            cdf_b = np.searchsorted(pooled, support, side="right") / len(pooled)
+            cdf_p = np.searchsorted(xs, support, side="right") / len(xs)
+            out[part] = float(np.max(np.abs(cdf_p - cdf_b)))
+        return out
 
-    pooled = np.sort(np.array([v for _, v in rows], dtype=float))
-    support = np.unique(pooled)
-    cdf_b = np.searchsorted(pooled, support, side="right") / len(pooled)
-    for part in {p for p, _ in rows}:
-        xs = np.sort(np.array([v for p, v in rows if p == part], dtype=float))
-        cdf_p = np.searchsorted(xs, support, side="right") / len(xs)
-        want = float(np.max(np.abs(cdf_p - cdf_b)))
-        assert got[part] == pytest.approx(want, abs=1e-12), (part, seed)
+    schema = "source string, n_tok {}"
+    df = spark.createDataFrame(rows, schema.format("int"))
+    cases = [
+        ("int", rows, rows, df, None),
+        ("continuous", cont, cont,
+         spark.createDataFrame(cont, schema.format("double")), None),
+        ("explicit", rows, base_rows, df, ks_value_counts(
+            spark.createDataFrame(base_rows, schema.format("int")),
+            "n_tok")),
+    ]
+    raw_rows = {}
+    for p, _ in rows:
+        raw_rows[p] = raw_rows.get(p, 0) + 1
+    for label, data, baseline, frame, counts in cases:
+        got = {r["partition_id"]: (r["ks_d"], r["rows_scanned"])
+               for r in ks_by_partition(frame, "source", "n_tok",
+                                        counts).collect()}
+        want = numpy_ks(data, baseline)
+        assert got.keys() == want.keys(), label
+        for part, d in want.items():
+            assert got[part][0] == pytest.approx(d, abs=1e-12), \
+                (label, part, seed)
+            assert got[part][1] == raw_rows[part], (label, part)
+
+
+def test_ks_plan_build_submits_no_job(spark):
+    """Building KS is lazy for every baseline source: no distinct-count
+    guard, no eager persist, no collect of an explicit baseline. Counted in
+    Spark's status store (jobs only ever get new, larger ids)."""
+    from pyanomalydetector_spark.checks.drift import (
+        ks_by_partition, ks_value_counts)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def n_jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return store.jobsList(sc._jvm.java.util.ArrayList()).size()
+
+    df = spark.createDataFrame(
+        [("s1", 10), ("s1", 12), ("s2", None), (None, 11)],
+        "source string, n_tok int")
+    base = spark.createDataFrame([("x", 11), ("x", 30)],
+                                 "source string, n_tok int")
+    before = n_jobs()
+    ks_by_partition(df, "source", "n_tok")
+    ks_by_partition(df, "source", "n_tok", ks_value_counts(base, "n_tok"))
+    res = run_checks(df, [Check("ks", "drift_ks", {"baseline": base})])
+    assert n_jobs() == before
+    assert not res.cached
 
 
 def test_materialize_counts_match_sequential(spark, seq):
@@ -376,39 +349,21 @@ def test_null_partition_scored_not_dropped(spark, tmp_path):
         {"n1", "n2", "n3"}
 
 
-def test_bounded_ks_eq_grid_ks_with_null_partition(spark):
-    """bounded=True (single-plan) and bounded=False (grid) KS must agree —
-    including on a NULL partition key, which the window-based bounded route
-    groups natively and the grid route must not silently zero out."""
-    from pyanomalydetector_spark.checks.drift import ks_by_partition
-    df = _null_partition_fixture(spark)
-
-    def snap(bounded):
-        out = ks_by_partition(df, "source", "n_tok", bounded=bounded,
-                              include_rows=True)
-        return sorted(((r["partition_id"], round(r["ks_d"], 9),
-                        r["rows_scanned"]) for r in out.collect()),
-                      key=lambda t: ("" if t[0] is None else t[0],))
-
-    assert snap(True) == snap(False)
-    assert len(snap(True)) == 2        # s1 + the NULL partition
-
-
 def test_ks_massless_sides_score_nan_not_null(spark):
     """Either mass-less KS side must score NaN (→ fail), never NULL.
 
     A NULL ks_d would make the verdict ``NULL <= threshold`` = NULL —
     silently neither pass nor fail, dropped by any passed/~passed filter.
     Three shapes, all hit in real pipelines via the checkpoint store
-    (plans/checkpoint.py:315 pins the NULL-v group of an all-NULL column):
-    (a) pinned counts route, all-NULL-value partition next to healthy ones;
-    (b) pinned counts route, baseline captured from an all-NULL column
-        (only the NULL-v group → zero grid mass) over healthy data;
-    (c) grid route, explicit all-NULL baseline frame over healthy data.
+    (compute_baseline pins the NULL-v group of an all-NULL column):
+    (a) pinned counts, all-NULL-value partition next to healthy ones;
+    (b) pinned counts captured from an all-NULL column (only the NULL-v
+        group → zero baseline mass) over healthy data;
+    (c) an explicit all-NULL baseline frame over healthy data — plain
+        ``/`` by its zero mass would fail the job under ANSI.
     """
     import math
-    from pyanomalydetector_spark.checks.drift import (
-        ks_by_partition, ks_by_partition_counts)
+    from pyanomalydetector_spark.checks.drift import ks_by_partition
 
     healthy = spark.createDataFrame(
         [("s1", 10), ("s1", 12), ("s2", 11), ("s2", 14)],
@@ -423,29 +378,31 @@ def test_ks_massless_sides_score_nan_not_null(spark):
     pinned = healthy.select(F.col("n_tok").cast("double").alias("v")) \
                     .groupBy("v").agg(F.count(F.lit(1)).alias("c_b"))
     out_a = {r["partition_id"]: r["ks_d"]
-             for r in ks_by_partition_counts(
+             for r in ks_by_partition(
                  island, "source", "n_tok", pinned).collect()}
     assert_nan(out_a["s3"], "a:s3")
     assert not math.isnan(out_a["s1"]) and not math.isnan(out_a["s2"])
 
     # (b) pinned counts from an all-NULL column: only the NULL-v group,
-    # which the grid's equi-join skips → zero baseline mass everywhere
+    # which carries no mass → zero baseline mass everywhere
     null_pin = spark.createDataFrame(
         [(None, 7)], "v double, c_b bigint")
     out_b = {r["partition_id"]: r["ks_d"]
-             for r in ks_by_partition_counts(
+             for r in ks_by_partition(
                  healthy, "source", "n_tok", null_pin).collect()}
     for pid, v in out_b.items():
         assert_nan(v, f"b:{pid}")
 
-    # (c) grid route with an explicit all-NULL baseline frame
+    # (c) explicit all-NULL baseline frame, through the check's reduction
     all_null = spark.createDataFrame(
         [("s1", None), ("s2", None)], "source string, n_tok int")
-    out_c = {r["partition_id"]: r["ks_d"]
-             for r in ks_by_partition(
-                 healthy, "source", "n_tok", baseline=all_null).collect()}
-    for pid, v in out_c.items():
-        assert_nan(v, f"c:{pid}")
+    res = run_checks(healthy, [Check("ks", "drift_ks",
+                                     {"baseline": all_null})])
+    out_c = {r["partition_id"]: r for r in res.verdicts.collect()}
+    assert out_c.keys() == {"s1", "s2"}
+    for pid, r in out_c.items():
+        assert_nan(r["observed"], f"c:{pid}")
+        assert r["passed"] is False, pid
 
 
 def test_token_invariant_null_partition(spark):

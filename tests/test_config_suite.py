@@ -51,6 +51,19 @@ def test_suite_and_conditions_and_detector_config():
     assert cfg.detect3_lambda_threshold1 == 3.0
 
 
+def test_sample_checks_match_default_suite():
+    """samples/default.yml and ``default_suite()`` declare the same check
+    ids with the same params, so one column never runs two configurations
+    (the referential check needs the caller's allowed set and lives in
+    ``default_suite`` only)."""
+    from pyanomalydetector_spark.checks.core import default_suite
+    code = {c.check_id: c for c in default_suite(["s1"])}
+    for c in suite_from_config(load_config(DEFAULT)):
+        assert c.check_id in code, c.check_id
+        assert (c.kind, c.params) == \
+            (code[c.check_id].kind, code[c.check_id].params), c.check_id
+
+
 def test_ignore_rule_without_condition(spark, tmp_path):
     """A rule with no ``condition`` removes every matching item
     (detector.py:168-169)."""

@@ -253,19 +253,27 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir):
 
 
 def test_bounded_ks_plan_two_pruned_scans_no_grid(spark, sf_dir):
-    """The bounded single-plan KS route must keep its audited shape: exactly
-    two parquet scans (the base-CDF side pruned to the value column only),
-    no dense-grid nested-loop join, and the only single-partition window
-    over the tiny distinct-values frame. A regression back to the grid
-    formulation (extra scans, BroadcastNestedLoopJoin) fails here."""
-    from pyanomalydetector_spark.checks.drift import ks_by_partition
+    """KS keeps its audited linear shape for every baseline source: no
+    dense-grid nested-loop join. Self baseline: exactly two parquet scans,
+    the base-CDF side pruned to the value column only. Pinned counts: the
+    counts frame joins the value-only scan on the base side. A regression
+    back to a grid formulation (extra scans, BroadcastNestedLoopJoin) fails
+    here."""
+    from pyanomalydetector_spark.checks.drift import (
+        ks_by_partition, ks_value_counts)
     seq = load_sequences(spark, sf_dir)
-    out = ks_by_partition(seq, "source", "n_tok", bounded=True,
-                          include_rows=True)
-    plan = _plan(out).split("== Initial Plan ==")[0]
+    plan = _plan(ks_by_partition(seq, "source", "n_tok")) \
+        .split("== Initial Plan ==")[0]
     assert plan.count("Scan parquet") == 2, plan[:3000]
     assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
     # base side reads only the value column
+    assert "struct<n_tok:int>" in plan, plan[:3000]
+
+    counts = ks_value_counts(seq, "n_tok")
+    plan = _plan(ks_by_partition(seq, "source", "n_tok", counts)) \
+        .split("== Initial Plan ==")[0]
+    assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
+    assert "CartesianProduct" not in plan, plan[:3000]
     assert "struct<n_tok:int>" in plan, plan[:3000]
 
 

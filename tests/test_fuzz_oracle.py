@@ -66,18 +66,15 @@ def test_suite_matches_duckdb_on_empty_table(spark, tmp_path):
 
 
 # Alternate execution routes must hit the SAME oracle: route ≡ route
-# equivalences (salted ≡ unsalted, digest ≡ direct, guarded KS grid ≡
-# bounded one-plan) are satisfied trivially by a shared semantic bug.
+# equivalences (salted ≡ unsalted, digest ≡ direct) are satisfied trivially
+# by a shared semantic bug.
 ROUTE_OVERRIDES = {
     "salted_unique": ("unique", {"salt_buckets": 4}),
     "digest_unique": ("unique", {"digest_prefilter": True}),
-    "guarded_ks": ("drift_ks", {"bounded": False}),
 }
 
 
 def _suite_with(kind: str, extra: dict):
-    # bounded=False may stay in params verbatim: the dispatcher reads
-    # params.get("bounded", False), so absent and False are identical
     suite = default_suite(ALLOWED)
     out = []
     for c in suite:
@@ -96,6 +93,25 @@ def test_route_variants_match_duckdb(spark, tmp_path, route):
     _compare(spark, _random_rows(19), tmp_path, f"{route}_r", suite=suite)
     _compare(spark, DEGENERATE["null_island"], tmp_path, f"{route}_n",
              suite=suite)
+
+
+@pytest.mark.parametrize("source", ["explicit", "pinned"])
+def test_ks_baseline_sources_match_duckdb(spark, tmp_path, source):
+    """KS against a baseline other than the input: an explicit ``baseline``
+    frame, or the ``baseline_counts`` the checkpoint store pins. Baselines:
+    a different random table (values the input lacks and vice versa) and an
+    all-NULL column (no mass → every partition NaN → fail)."""
+    from pyanomalydetector_spark.checks.drift import ks_value_counts
+    for b_label, b_rows in [("other", _random_rows(7)),
+                            ("all_null", DEGENERATE["all_null_ntok"])]:
+        frame = spark.createDataFrame(b_rows, SCHEMA)
+        extra = ({"baseline": frame} if source == "explicit" else
+                 {"baseline_counts": ks_value_counts(frame, "n_tok")})
+        suite = _suite_with("drift_ks", extra)
+        for d_label, rows in [("r", _random_rows(19)),
+                              ("n", DEGENERATE["null_island"])]:
+            _compare(spark, rows, tmp_path,
+                     f"ks_{source}_{b_label}_{d_label}", suite=suite)
 
 
 def test_null_metadata_contradiction_counts(spark, tmp_path):
