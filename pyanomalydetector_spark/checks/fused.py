@@ -360,8 +360,16 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
     # vs 3.19 s eager). This is the opposite call from the minhash/simhash
     # banding caches, where the duplicated work is a whole extra
     # explode+aggregate pass and eager wins — measure before changing.
+    # ONE partition before the persist: the frame holds one row per
+    # partition, but a persisted plan keeps its shuffle's output
+    # partitioning (canChangeCachedPlanOutputPartitioning=false), so
+    # without the coalesce every verdict frame built on it ran
+    # spark.sql.shuffle.partitions tasks per stage (a 5k-row micro-batch:
+    # 475 tasks, 140 verdict files). The coalesced final stage reads only
+    # the map-side partial aggregates (#map tasks × #partitions rows).
     part_aggs = part_src.groupBy(F.col(pcol).alias("partition_id")) \
-                        .agg(*[F.expr(a) for a in aggs]).persist()
+                        .agg(*[F.expr(a) for a in aggs]) \
+                        .coalesce(1).persist()
 
     # ---- global baselines: lazy 1-row re-agg of the tiny frame -------------
     need_globals = any(

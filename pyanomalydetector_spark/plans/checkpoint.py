@@ -400,7 +400,6 @@ def run_with_checkpoint(df: DataFrame, checks: list[Check],
     ``(suite_hash, snapshot_id)`` — identical to a from-scratch run
     (asserted in tests/test_checkpoint.py).
     """
-    spark = df.sparkSession
     shash = suite_hash(checks)
     run_id = time.time_ns()
 
@@ -423,8 +422,9 @@ def run_with_checkpoint(df: DataFrame, checks: list[Check],
         is_done = is_done | F.col(partition_col).isNull()
     pending_df = df.filter(~is_done) if done else df
 
-    all_parts = {r[0] for r in df.select(partition_col).distinct().collect()}
-    if all_parts - set(done):
+    # the null-safe is_done filter drops exactly the done partitions, so
+    # "any partition left" is "any row left" — no distinct shuffle
+    if not pending_df.isEmpty():
         t0 = time.perf_counter()
         res = run_checks(pending_df, pinned, partition_col)
         verdicts = res.verdicts.localCheckpoint()
@@ -436,7 +436,10 @@ def run_with_checkpoint(df: DataFrame, checks: list[Check],
                 F.lit(snapshot_id).alias("snapshot_id"),
                 F.lit(run_id).alias("run_id")]
         verdicts.select("*", *meta).write.mode("append").parquet(store.verdicts_dir)
-        violations.select("*", *meta).write.mode("append").parquet(store.violations_dir)
+        # one partition of verdicts; violations rebalanced so AQE sizes
+        # their files to the rows (see streaming/check_stream.py)
+        violations.hint("rebalance").select("*", *meta) \
+                  .write.mode("append").parquet(store.violations_dir)
 
         # per-partition lineage: digest over the partition's sorted verdicts
         digest = verdicts.groupBy("partition_id").agg(

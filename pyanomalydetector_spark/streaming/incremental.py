@@ -192,7 +192,15 @@ def stateful_running_stats(stream: DataFrame, id_col: str = "itemid",
     bounded by the working set of active keys, the reference's retention
     rule (T7) applied to streaming state. A re-appearing evicted key
     restarts its statistics from zero (tests/test_streaming.py pins the
-    eviction)."""
+    eviction).
+
+    **Draining with a timeout**: a processing-time timeout keeps scheduling
+    batches with no data, so a ``trigger(availableNow=True)`` query over
+    this operator never ends once its input is drained. Set
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` around that
+    query's ``start()`` (the started query keeps the value) and restore it
+    afterwards; timeouts then fire only in batches that carry data.
+    Without ``idle_timeout_ms`` the query ends by itself either way."""
     import math
 
     import numpy as np

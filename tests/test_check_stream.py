@@ -103,3 +103,87 @@ def test_stream_crash_between_write_and_mark_no_duplicates(spark, seq,
 
     assert sorted(map(tuple, runner.verdicts().collect())) == v_before
     assert runner.violations().count() == viol_before
+
+
+def _wide_batch(spark, seq, path, first_copy, copies=10):
+    """``copies`` renamed copies of the fixture (506 rows → 5,060), written
+    as parquet like the stream's input files; copy ``i`` suffixes every
+    doc_id with ``#i``, so batches built from disjoint copies are
+    disjoint."""
+    seq.crossJoin(spark.range(first_copy, first_copy + copies).toDF("_c")) \
+       .withColumn("doc_id", F.concat_ws("#", "doc_id",
+                                         F.col("_c").cast("string"))) \
+       .drop("_c").write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _jobs(spark):
+    """``(job id, completed tasks)`` of every job so far, read from the
+    status store after draining the listener bus; job ids only grow."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    jobs = sc._jsc.sc().statusStore().jobsList(sc._jvm.java.util.ArrayList())
+    return [(jobs.apply(i).jobId(), jobs.apply(i).numCompletedTasks())
+            for i in range(jobs.size())]
+
+
+def test_batch_results_sized_by_rows(spark, seq, tmp_path):
+    """A 5k-row batch writes one verdict file and one violation file, and a
+    warm batch runs a few dozen tasks: result frames are sized by the rows
+    they hold, not by the shuffle partitions of the rollups behind them."""
+    import glob
+    import os
+
+    runner = StreamingSuiteRunner(spark, str(tmp_path / "store"), _suite(seq))
+    runner.apply_batch(_wide_batch(spark, seq, str(tmp_path / "b0"), 0), 0)
+    b1 = _wide_batch(spark, seq, str(tmp_path / "b1"), 10)
+    assert b1.count() >= 5000
+
+    last = max((j for j, _ in _jobs(spark)), default=-1)
+    runner.apply_batch(b1, 1)
+    tasks = sum(t for j, t in _jobs(spark) if j > last)
+    assert 0 < tasks <= 60, tasks
+
+    for kind in ("verdicts", "violations"):
+        parts = glob.glob(os.path.join(runner._batch_dir(kind, 1),
+                                       "part-*.parquet"))
+        assert len(parts) == 1, (kind, parts)
+    viol = runner.violations().filter(F.col("batch_id") == 1)
+    assert viol.count() > 0
+
+
+def test_second_runner_uses_stored_baseline(spark, seq, tmp_path):
+    """The pinned suite a runner keeps is only a cache of the store: a new
+    runner on the same store scores a batch exactly as the first runner
+    did, against the baseline pinned from the first batch, not against the
+    batch it happens to see first."""
+    store = str(tmp_path / "store")
+    suite = _suite(seq)
+    parts = sorted(r["source"] for r in seq.select("source").distinct()
+                   .collect())
+    # batch 1 covers a third of the partitions, so a baseline taken from it
+    # would differ from the one batch 0 pinned
+    b0 = seq
+    b1 = seq.filter(F.col("source").isin(parts[: len(parts) // 3]))
+
+    first = StreamingSuiteRunner(spark, store, suite)
+    first.apply_batch(b0, 0)
+    first.apply_batch(b1, 1)
+    second = StreamingSuiteRunner(spark, store, suite)
+    second.apply_batch(b1, 2)
+
+    def rows(runner, batch_id):
+        return sorted(
+            (r["partition_id"], r["check_id"], r["passed"], r["observed"],
+             r["expected"], r["threshold"], r["n_violations"],
+             r["rows_scanned"])
+            for r in runner.verdicts().filter(F.col("batch_id") == batch_id)
+                           .drop("batch_id").collect())
+
+    got = rows(second, 2)
+    assert got and got == rows(first, 1)
+    # the baseline really is the pinned one: a self-baselined run of batch 1
+    # scores differently
+    fresh = StreamingSuiteRunner(spark, str(tmp_path / "fresh"), suite)
+    fresh.apply_batch(b1, 0)
+    assert rows(fresh, 0) != got

@@ -24,9 +24,10 @@ SCHEMA = "itemid string, clock long, value double"
 
 def _await_and_stop(q, timeout):
     """Wait for ``q``; stop it even when it overruns ``timeout``, so an
-    unfinished query cannot hold task slots into later tests."""
+    unfinished query cannot hold task slots into later tests. Returns
+    whether ``q`` ended by itself within ``timeout``."""
     try:
-        q.awaitTermination(timeout)
+        return q.awaitTermination(timeout)
     finally:
         q.stop()
 
@@ -184,12 +185,20 @@ def test_stateful_idle_timeout_evicts_and_restarts(spark, tmp_path):
     def drain():
         stream = spark.readStream.schema(schema).parquet(inp)
         out = stateful_running_stats(stream, idle_timeout_ms=1000)
-        q = (out.writeStream
-                .foreachBatch(lambda df, bid: captured.extend(df.collect()))
-                .outputMode("update")
-                .option("checkpointLocation", str(tmp_path / "ck"))
-                .trigger(availableNow=True).start())
-        _await_and_stop(q, 180)
+        # timeouts keep scheduling no-data batches, so an availableNow
+        # query ends only with those off (see stateful_running_stats)
+        key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            q = (out.writeStream
+                    .foreachBatch(lambda df, bid: captured.extend(df.collect()))
+                    .outputMode("update")
+                    .option("checkpointLocation", str(tmp_path / "ck"))
+                    .trigger(availableNow=True).start())
+        finally:
+            spark.conf.set(key, prev)
+        assert _await_and_stop(q, 180)
 
     # batch 1: key 1 sees 3 rows
     spark.createDataFrame([(1, c, float(c)) for c in range(3)], schema) \
