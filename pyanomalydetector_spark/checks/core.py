@@ -138,6 +138,27 @@ def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
+def sized_to_input(frame: DataFrame, df: DataFrame) -> DataFrame:
+    """``frame`` — a small result built from ``df`` — coalesced to one
+    partition per ``spark.sql.files.maxPartitionBytes`` of the planner's
+    size estimate of ``df``, or returned as is when that reaches
+    ``spark.sql.shuffle.partitions``. The estimate is the optimized plan's
+    statistics (file sizes for a file scan; no job runs); an input of
+    unknown size, such as an RDD-backed frame, keeps the parallel plan.
+
+    ``coalesce`` is narrow: it also sets the task count of the stage that
+    produces ``frame``, up to the last shuffle. Tying it to the input size
+    keeps that stage's work per task bounded by one input split's worth —
+    a 5k-row micro-batch runs it as one task, a multi-GB input in parallel
+    as before."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    size = size if isinstance(size, int) else int(size.toString())
+    n = -(-size // conf.filesMaxPartitionBytes())
+    return frame.coalesce(max(n, 1)) if n < conf.numShufflePartitions() \
+        else frame
+
+
 def _finish_verdicts(v: DataFrame) -> DataFrame:
     """Project to the uniform verdict schema (column order + types)."""
     return v.select(
@@ -378,17 +399,21 @@ def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     # defers it to materialize(), where every cached frame's first count
     # runs CONCURRENTLY with the others — the unique shuffle now overlaps
     # the fused aggregate pass (measured 53 s → ~44 s at local[4]/32M).
-    # ONE partition before the persist, like the fused aggregate: a
+    # Sized to the input before the persist, like the fused aggregate: a
     # persisted frame keeps its shuffle's output partitioning, and the
     # verdict and violation frames built on it would inherit that fan-out
-    # for a handful of rows. The (partition, key) count shuffle below the
-    # rollup stays parallel.
+    # for a handful of rows. Trade: the coalesce also sets the task count
+    # of the rollup's last stage (the duplicate ranking window and
+    # collect_list over every key with cnt > 1), so a small input runs it
+    # as one task; it stays parallel from one split of input per task up
+    # (see sized_to_input). The (partition, key) count shuffle below it
+    # always stays parallel.
     if digest_prefilter:
         per_part = _unique_per_part_digest(df, key, pcol, max_dup_emit)
     else:
         per_part = _unique_per_part(df, key, pcol, salt_buckets,
                                     max_dup_emit)
-    per_part = per_part.coalesce(1).persist()
+    per_part = sized_to_input(per_part, df).persist()
 
     dups = per_part.select(
         "partition_id", F.explode("_dups").alias("d")
@@ -634,10 +659,15 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
     violations = _empty(spark, VIOLATION_SCHEMA)
     for v in violation_frames:
         violations = violations.unionByName(v)
-    # verdicts hold at most partitions × checks rows: one partition, so a
-    # writer lands one file. Violations can be as large as the input and
-    # stay parallel; the writers rebalance them instead.
-    return CheckResult(verdicts.coalesce(1), violations, cached=tuple(cached))
+    # verdicts hold at most partitions × checks rows: sized to the input, so
+    # a small run's writer lands one file. The coalesce also folds the
+    # stages after the last shuffle of every verdict plan (KS's
+    # per-partition windows included) into that many tasks — one task for
+    # a small input, the parallel plan from spark.sql.shuffle.partitions
+    # splits of input up. Violations can be as large as the input and stay
+    # parallel; the stream writer rebalances them instead.
+    return CheckResult(sized_to_input(verdicts, df), violations,
+                       cached=tuple(cached))
 
 
 def default_suite(allowed_sources: Iterable[str]) -> list[Check]:

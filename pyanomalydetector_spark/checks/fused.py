@@ -73,6 +73,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyanomalydetector_spark.checks.core import sized_to_input
 from pyanomalydetector_spark.checks.drift import PSI_SMOOTH, psi_histogram
 
 FUSIBLE_KINDS = frozenset({"column_stats", "zscore_threshold", "referential",
@@ -360,16 +361,18 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
     # vs 3.19 s eager). This is the opposite call from the minhash/simhash
     # banding caches, where the duplicated work is a whole extra
     # explode+aggregate pass and eager wins — measure before changing.
-    # ONE partition before the persist: the frame holds one row per
+    # Sized to the input before the persist: the frame holds one row per
     # partition, but a persisted plan keeps its shuffle's output
     # partitioning (canChangeCachedPlanOutputPartitioning=false), so
     # without the coalesce every verdict frame built on it ran
     # spark.sql.shuffle.partitions tasks per stage (a 5k-row micro-batch:
-    # 475 tasks, 140 verdict files). The coalesced final stage reads only
-    # the map-side partial aggregates (#map tasks × #partitions rows).
-    part_aggs = part_src.groupBy(F.col(pcol).alias("partition_id")) \
-                        .agg(*[F.expr(a) for a in aggs]) \
-                        .coalesce(1).persist()
+    # 475 tasks, 140 verdict files). Trade: the coalesce also sets the task
+    # count of the final merge, which reads the map-side partial aggregates
+    # (#map tasks × #partitions rows); sized_to_input keeps that one task
+    # for a small input and parallel from one split of input per task up.
+    part_aggs = sized_to_input(
+        part_src.groupBy(F.col(pcol).alias("partition_id"))
+                .agg(*[F.expr(a) for a in aggs]), df).persist()
 
     # ---- global baselines: lazy 1-row re-agg of the tiny frame -------------
     need_globals = any(

@@ -436,10 +436,7 @@ def run_with_checkpoint(df: DataFrame, checks: list[Check],
                 F.lit(snapshot_id).alias("snapshot_id"),
                 F.lit(run_id).alias("run_id")]
         verdicts.select("*", *meta).write.mode("append").parquet(store.verdicts_dir)
-        # one partition of verdicts; violations rebalanced so AQE sizes
-        # their files to the rows (see streaming/check_stream.py)
-        violations.hint("rebalance").select("*", *meta) \
-                  .write.mode("append").parquet(store.violations_dir)
+        violations.select("*", *meta).write.mode("append").parquet(store.violations_dir)
 
         # per-partition lineage: digest over the partition's sorted verdicts
         digest = verdicts.groupBy("partition_id").agg(

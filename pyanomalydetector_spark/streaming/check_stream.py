@@ -16,13 +16,11 @@ violations are appended to the store with batch lineage. Semantics:
   duplicate rows — the retry overwrites the orphaned partial output.
 - **Per-batch lineage**: each verdict row carries ``batch_id``; the driver
   can ask "which batch introduced these violations".
-- **One file per result set**: a batch's verdicts come back from
-  ``run_checks`` as one partition and its violations are rebalanced before
-  the write, so a small batch lands one verdict file and one violation
-  file (AQE splits the violations only when they are large).
-- **Baseline pinned once per runner**: the suite pinned to the stored
-  baseline is built at the runner's first non-empty batch and kept; a new
-  runner on an existing store loads the stored baseline again.
+- **One file per result set**: a small batch's verdicts come back from
+  ``run_checks`` as one partition (they are sized to the input) and its
+  violations are rebalanced before the write, so a small batch lands one
+  verdict file and one violation file (AQE splits the violations only when
+  they are large).
 
 Testable with ``trigger(availableNow=True)`` — drain current files, stop.
 """
@@ -54,9 +52,6 @@ class StreamingSuiteRunner:
         self.pcol = partition_col
         self.store_path = store_path
         self.ledger_path = os.path.join(store_path, "stream_ledger.json")
-        # the suite pinned to the stored baseline, built at the first
-        # non-empty batch this runner sees and reused for every later one
-        self._pinned: list | None = None
 
     def _batch_dir(self, kind: str, batch_id: int) -> str:
         """Per-batch result directory — overwrite-on-retry is idempotent."""
@@ -85,14 +80,13 @@ class StreamingSuiteRunner:
             self._mark(batch_id)
             return
 
-        if self._pinned is None:
-            bl = self.store.load_baseline(self.shash, "stream")
-            if bl is None:   # first batch establishes the baseline
-                bl, ks_counts = compute_baseline(batch_df, self.suite)
-                self.store.save_baseline(self.shash, "stream", bl, ks_counts)
-            self._pinned = pin_suite(self.suite, bl, self.store)
+        bl = self.store.load_baseline(self.shash, "stream")
+        if bl is None:   # first batch establishes the baseline
+            bl, ks_counts = compute_baseline(batch_df, self.suite)
+            self.store.save_baseline(self.shash, "stream", bl, ks_counts)
+        pinned = pin_suite(self.suite, bl, self.store)
 
-        res = run_checks(batch_df, self._pinned, self.pcol)
+        res = run_checks(batch_df, pinned, self.pcol)
         meta = [F.lit(self.shash).alias("suite_hash"),
                 F.lit("stream").alias("snapshot_id"),
                 F.lit(int(batch_id)).alias("run_id")]
@@ -100,7 +94,7 @@ class StreamingSuiteRunner:
         # readers only surface batches recorded in the ledger — a crash
         # between the write and _mark() leaves an invisible partial batch
         # that the retry simply overwrites (no duplicate rows possible).
-        # verdicts arrive as one partition; AQE sizes the violation files
+        # verdicts arrive sized to the batch; AQE sizes the violation files
         res.verdicts.select("*", *meta) \
            .write.mode("overwrite").parquet(self._batch_dir("verdicts", batch_id))
         res.violations.hint("rebalance").select("*", *meta) \

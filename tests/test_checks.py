@@ -261,6 +261,45 @@ def test_results_invariant_under_shuffle_partitioning(spark, seq):
     assert run_at(3) == run_at(17)
 
 
+def test_result_partitions_follow_input_size(spark, seq, tmp_path):
+    """The verdicts and the persisted rollups behind them (the fused
+    aggregate, unique's rollup) get one partition per
+    spark.sql.files.maxPartitionBytes of the planner's size estimate of the
+    input, and keep the parallel plan once that reaches
+    spark.sql.shuffle.partitions: a coalesce also sets the task count of
+    the stage behind it, so it must not be a constant one task."""
+    path = str(tmp_path / "in")
+    seq.write.parquet(path)
+    df = spark.read.parquet(path)
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    size = size if isinstance(size, int) else int(size.toString())
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    suite = [Check("uniq", "unique", {"key": "doc_id"}),
+             Check("z", "zscore_threshold",
+                   {"value_col": "n_tok", "lambda": 2.0,
+                    "ignore_diff_rate": 0.1}),
+             Check("ks", "drift_ks", {"value_col": "n_tok"})]
+
+    def partitions(split_bytes):
+        """(verdict partitions, sorted partitions of each cached frame)"""
+        key = "spark.sql.files.maxPartitionBytes"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, str(split_bytes))
+        try:
+            res = run_checks(df, suite)
+            got = (res.verdicts.rdd.getNumPartitions(),
+                   sorted(f.rdd.getNumPartitions() for f in res.cached))
+            res.unpersist()
+            return got
+        finally:
+            spark.conf.set(key, prev)
+
+    assert partitions(size) == (1, [1, 1])
+    assert partitions(-(-size // 3)) == (3, [3, 3])
+    n_verdicts, cached = partitions(size // (2 * shuffle))
+    assert cached == [shuffle, shuffle] and n_verdicts > shuffle
+
+
 def test_token_invariant_corrupted_duplicate_not_masked(spark):
     """A corrupted DUPLICATE row must be flagged even when a clean copy of
     the same doc_id exists in the partition (min+max digest comparison +
