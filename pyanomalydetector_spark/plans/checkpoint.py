@@ -299,7 +299,11 @@ class CheckpointStore:
         if os.path.exists(self.baseline_json):
             with open(self.baseline_json) as f:
                 d = json.load(f).get("ks_dirs", {}).get(value_col, d)
-        return self.spark.read.parquet(os.path.join(self.ks_dir, d))
+        # the schema is drift.ks_value_counts'; giving it skips the
+        # footer-inference job that every read of the counts would run
+        # (once per stream batch)
+        return self.spark.read.schema("v double, c_b long") \
+                   .parquet(os.path.join(self.ks_dir, d))
 
     # ------------------------------------------------------------ results ---
     def _read_results(self, directory: str, schema, shash: str, snap: str) -> DataFrame:
