@@ -1,7 +1,8 @@
 from pyanomalydetector_spark.operators.detect import (
-    DetectorConfig, detect1, detect2, detect3, detect_cascade,
+    DetectorConfig, detect1, detect2, detect3,
     adjacent_diff_stats, local_peaks,
 )
+from pyanomalydetector_spark.operators.cascade_fused import detect_cascade
 from pyanomalydetector_spark.operators.rollup import tumbling_rollup
 from pyanomalydetector_spark.operators.normalize import (
     base_clock_grid, resample_to_grid, minmax_normalize,

@@ -1,17 +1,15 @@
-"""Single-plan fused execution of the detect1→2→3→4 cascade.
+"""The detect1→2→3→4 cascade as one predicate plan.
 
-The staged cascade (:func:`pyanomalydetector_spark.operators.detect.
-detect_cascade`) mirrors the reference's imperative control flow
-(/root/reference/data_processing/detect_anomalies.py:82-113): each stage
-materializes its survivor key set and the next stage semi-joins against it.
-That is ~10 Spark jobs and a localCheckpoint per stage boundary — correct,
-but the job-scheduling latency dominates at any scale and the survivor
-narrowing is pure *efficiency*, not semantics: every stage verdict is a
-per-item predicate over aggregates of fixed windows, and aggregating a
-semi-joined frame per item is identical to aggregating the full frame per
-item and filtering afterwards.
-
-So the whole cascade is algebraically ONE conjunctive predicate over a
+The reference runs the cascade as an imperative loop
+(``data_processing/detect_anomalies.py:82-113``): each stage computes its
+survivor key set and the next stage only looks at those items. The
+narrowing is *efficiency*, not semantics: every stage verdict is a per-item
+predicate over aggregates of fixed windows, and aggregating a narrowed frame
+per item is identical to aggregating the full frame per item and filtering
+afterwards. So the survivor set of the chain is the intersection of the
+per-stage survivor sets (``detect1``/``detect2``/``detect3`` in
+operators/detect.py, which tests/test_cascade_fused.py uses as the
+reference), and the whole cascade is ONE conjunctive predicate over a
 per-item feature frame, computable in two passes:
 
 1. ONE pass over the (tiny, checkpointed) trends envelope rollup deriving
@@ -27,28 +25,28 @@ per-item feature frame, computable in two passes:
 
 Stage composition is then boolean algebra on that frame:
 ``s1 ∧ s2 ∧ (A₃ ∨ B₃) ∧ (A₄ ∨ B₄)`` — NULL-safe (a missing trend/envelope
-row makes the predicate NULL which filters exactly like the staged path's
-inner joins dropped the item).
+row makes the predicate NULL, which drops the item exactly like the
+per-stage operators' inner joins do).
 
-Result equality with the staged path is pinned by tests/test_cascade_fused.py
-across stage subsets, thresholds, and empty-survivor fixtures.
+The strict reference-quirk modes are terms of the same predicate: the
+signed-mean guards of detect1/detect2 are plain column expressions, and the
+anchored-stride peak walk (``local_peaks_strict``, a grouped pandas UDF)
+runs only over the items that pass the predicate with every peak comparison
+taken as TRUE — a superset of the survivors — before the full predicate is
+applied.
 
-At 100 TB: the staged path re-scans (cached) history once per stage but
-touches progressively fewer items; the fused path scans history exactly once
-but for all items. Since every stage's history pass is already a full scan of
-the *same cached slice* (the narrowing semi-join does not prune file I/O, only
-rows after the probe), the fused plan strictly reduces both I/O and job
-count; the per-item state that crosses the shuffle is O(#items × ~16 cols)
-either way. Strict reference-quirk modes (anchored-stride peaks, signed-mean
-guards) stay on the staged path — they exist for bit-parity, not speed.
+At 100 TB: the history slice is scanned exactly once for all items; the
+per-item state that crosses the shuffle is O(#items × ~16 cols).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyanomalydetector_spark.operators.detect import DetectorConfig
+from pyanomalydetector_spark.operators.detect import (
+    DetectorConfig, local_peaks_strict,
+)
 
 
 def _nvl(c: Column) -> Column:
@@ -72,8 +70,8 @@ def _env_features(env: DataFrame, density_window: int, suffix: str,
     get ``suffix`` so the short/long envelopes coexist in one join.
     """
     # SQL strings, not the Column DSL — same plan-construction fast path as
-    # checks/fused.py (one py4j round trip per SELECT; trees identical —
-    # fused ≡ staged pinned in tests/test_cascade_fused.py, oracle hash-exact)
+    # checks/fused.py (one py4j round trip per SELECT; survivor sets pinned
+    # against the per-stage operators in tests/test_cascade_fused.py)
     w_lag = "OVER (PARTITION BY itemid ORDER BY clock)"
     w_peak = (f"OVER (PARTITION BY itemid ORDER BY clock "
               f"RANGE BETWEEN {density_window - 1} PRECEDING AND CURRENT ROW)")
@@ -81,8 +79,8 @@ def _env_features(env: DataFrame, density_window: int, suffix: str,
 
     vmax = "CAST(value_max AS DOUBLE)"
     vmin = "CAST(value_min AS DOUBLE)"
-    # NULL-ify zero diffs so avg/stddev skip them exactly like the staged
-    # path's ``filter(diff != 0)`` (adjacent_diff_stats)
+    # NULL-ify zero diffs so avg/stddev skip them exactly like
+    # adjacent_diff_stats' ``filter(diff != 0)``
     diff_up = f"({vmax} - LAG({vmax}) {w_lag})"
     diff_dw = f"({vmin} - LAG({vmin}) {w_lag})"
 
@@ -131,53 +129,61 @@ def _env_features(env: DataFrame, density_window: int, suffix: str,
 
 
 def _detect3_pred(tag: str, hist_count: int, hist_count2: int,
-                  cfg: DetectorConfig) -> Column:
+                  cfg: DetectorConfig, peaks: bool = True) -> Column:
     """detect3/4 (detector.py:498-584) as a predicate over the feature frame:
     stage A (λ1, full-window counts + full-mean peak guard), else stage B
-    (λ2, recent counts + recent-mean peak guard)."""
+    (λ2, recent counts + recent-mean peak guard). ``peaks=False`` takes every
+    peak comparison as TRUE, which admits a superset of the survivors."""
     rate = cfg.anomaly_valid_count_rate
-    a_up = (F.col(f"cnt_up_a{tag}") / F.lit(float(hist_count)) > rate) & \
-           (F.col(f"peak_up{tag}") < F.col("mean_full"))
-    a_dw = (F.col(f"cnt_dw_a{tag}") / F.lit(float(hist_count)) > rate) & \
-           (F.col(f"peak_dw{tag}") > F.col("mean_full"))
-    stage_a = _nvl(a_up) | _nvl(a_dw)
-    b_up = (F.col(f"cnt_up_b{tag}") / F.lit(float(hist_count2)) > rate) & \
-           (F.col(f"peak_up{tag}") < F.col("mean_recent"))
-    b_dw = (F.col(f"cnt_dw_b{tag}") / F.lit(float(hist_count2)) > rate) & \
-           (F.col(f"peak_dw{tag}") > F.col("mean_recent"))
-    # staged semantics are "stage A, else stage B" — a plain union once the
-    # terms are null-safe booleans (A ∪ B)
-    return stage_a | _nvl(b_up) | _nvl(b_dw)
+
+    def term(stage: str, side: str, denom: int, mean: str) -> Column:
+        test = F.col(f"cnt_{side}_{stage}{tag}") / F.lit(float(denom)) > rate
+        if peaks:
+            peak, ref = F.col(f"peak_{side}{tag}"), F.col(mean)
+            test = test & ((peak < ref) if side == "up" else (peak > ref))
+        return _nvl(test)
+
+    # detect3's "stage A, else stage B" is a plain union once the terms are
+    # null-safe booleans (A ∪ B)
+    return (term("a", "up", hist_count, "mean_full")
+            | term("a", "dw", hist_count, "mean_full")
+            | term("b", "up", hist_count2, "mean_recent")
+            | term("b", "dw", hist_count2, "mean_recent"))
 
 
-def detect_cascade_fused(history_df: DataFrame, trends_df: DataFrame,
-                         recent_df: DataFrame, cfg: DetectorConfig,
-                         hist_count: int, hist_count2: int,
-                         startep2: int,
-                         long_trends_df: DataFrame | None = None,
-                         hist_count4: int | None = None,
-                         hist_count4_2: int | None = None,
-                         stages: tuple[int, ...] = (1, 2, 3, 4),
-                         materialize_envs: bool = True) -> DataFrame:
-    """Drop-in equivalent of :func:`detect_cascade` as one declarative plan.
+def detect_cascade(history_df: DataFrame, trends_df: DataFrame,
+                   recent_df: DataFrame, cfg: DetectorConfig,
+                   hist_count: int, hist_count2: int,
+                   startep2: int,
+                   long_trends_df: DataFrame | None = None,
+                   hist_count4: int | None = None,
+                   hist_count4_2: int | None = None,
+                   stages: tuple[int, ...] = (1, 2, 3, 4)) -> DataFrame:
+    """The full cascade (detect_anomalies.py:82-113) as one declarative plan;
+    returns the survivor key set DF(itemid). See the module docstring for
+    the algebra.
 
-    Same arguments and the same survivor set; see the module docstring for
-    the algebra. Falls back to the staged path when any strict-reference
-    quirk mode is on (those replicate row-order-dependent reference behavior
-    the predicate algebra deliberately does not).
+    ``stages`` mirrors the reference's ``detection_stages`` list (e.g.
+    ``(1, 4)`` is the detect1+detect4 combo of
+    tests/test_detector_all.py:10-12); skipped stages pass every item
+    through. An empty ``stages`` yields an empty set, matching the reference.
+    Documented divergence: in the reference, a stage list WITHOUT detect1
+    short-circuits to nothing (detect_anomalies.py:88-89 ``continue`` fires
+    before its own "all items" fallback at :93-94 can run — dead code); we
+    implement that fallback's evident intent, so later stages start from
+    ALL items.
 
-    ``materialize_envs=False`` skips the env localCheckpoint when the caller
-    already materialized the rollup (e.g. the pipeline's shared-scan path
-    that derives the short env by filtering the checkpointed long env).
+    detect4 (detect_anomalies.py:109-113) is detect3 over the
+    ``long_trends_retention`` envelope ``long_trends_df`` with base-clock
+    denominators ``hist_count4``/``hist_count4_2``; it runs only when both
+    ``4 in stages`` and ``long_trends_df is not None``.
+
+    ``history_df`` is detect1's history window; ``recent_df`` is the slice
+    detect2/3/4 read (may be ``history_df`` itself). ``trends_df`` and
+    ``long_trends_df`` are the envelope rollups; several branches of the
+    plan read them, so callers pass them materialized (localCheckpoint), as
+    ``detect_pipeline`` does.
     """
-    if (cfg.strict_reference_peaks or cfg.strict_reference_diff_guard
-            or cfg.strict_reference_detect1_guard):
-        from pyanomalydetector_spark.operators.detect import detect_cascade
-        return detect_cascade(history_df, trends_df, recent_df, cfg,
-                              hist_count, hist_count2, startep2,
-                              long_trends_df, hist_count4, hist_count4_2,
-                              stages)
-
     run4 = 4 in stages and long_trends_df is not None
     ran = [s for s in stages if s in (1, 2, 3)] + ([4] if run4 else [])
     if not ran:
@@ -186,10 +192,6 @@ def detect_cascade_fused(history_df: DataFrame, trends_df: DataFrame,
 
     # ---- pass 1: env features off the (tiny) rollup frames -----------------
     density_window = cfg.history_interval * cfg.history_retention
-    if materialize_envs:
-        trends_df = trends_df.localCheckpoint()
-        if run4:
-            long_trends_df = long_trends_df.localCheckpoint()
     feats = _env_features(trends_df, density_window, "",
                           with_detect12=bool({1, 2} & set(stages)))
     if run4:
@@ -216,7 +218,7 @@ def detect_cascade_fused(history_df: DataFrame, trends_df: DataFrame,
             # (try_divide + inf/NaN→0 scrub, stats.py:130-135). cnt==0
             # (an item whose history values are all NULL) must stay NULL,
             # not scrub to 0: finalize_mean_std drops cnt==0 rows, so the
-            # staged inner join excludes the item — the NULL propagates
+            # detect1 inner join excludes the item — the NULL propagates
             # through the band predicate and _nvl drops it identically.
             s, c = F.sum(v), F.count(v)
             mean = F.try_divide(s, c.cast("double"))
@@ -271,39 +273,78 @@ def detect_cascade_fused(history_df: DataFrame, trends_df: DataFrame,
             *hist_aggs(with_d1=True, with_rest=False))
         rec = with_thresholds(recent_df).groupBy("itemid") \
             .agg(*hist_aggs(with_d1=False))
-        # stage≥2 survivors must appear in BOTH frames (staged: detect1 runs
-        # on history, later stages on recent narrowed to its survivors)
+        # stage≥2 survivors must appear in BOTH frames (detect1 reads
+        # history, the later stages read recent)
         spine = d1.join(rec, "itemid")
 
     frame = spine.join(F.broadcast(feats), "itemid", "left")
 
     # ---- stage predicates --------------------------------------------------
-    pred = F.lit(True)
-    if 1 in stages:
-        lam = cfg.detect1_lambda_threshold
-        band = (F.col("mean_h") > F.col("mean_t") + lam * F.col("std_t")) | \
-               (F.col("mean_h") < F.col("mean_t") - lam * F.col("std_t"))
-        dev = F.abs(F.col("mean_h") - F.col("mean_t"))
-        guard = (F.col("mean_t") > 0) & \
-                (F.try_divide(dev, F.col("mean_t")) > cfg.ignore_diff_rate)
-        eligible = (F.col("cnt_t") > cfg.trends_min_count) & \
-                   (F.col("std_t") > 0)
-        pred = pred & _nvl(eligible & band & guard)
-    if 2 in stages:
-        lam = cfg.detect2_lambda_threshold
-        rate = cfg.ignore_diff_rate
+    def predicate(peaks: bool) -> Column:
+        pred = F.lit(True)
+        if 1 in stages:
+            lam = cfg.detect1_lambda_threshold
+            mean_h, mean_t, std_t = F.col("mean_h"), F.col("mean_t"), \
+                F.col("std_t")
+            band = (mean_h > mean_t + lam * std_t) | \
+                   (mean_h < mean_t - lam * std_t)
+            guard = mean_t > 0
+            if not cfg.strict_reference_detect1_guard:
+                # detector.py:218's intended semantics; the strict mode keeps
+                # its literal runtime behavior (the precedence bug makes the
+                # rel-diff term vanish, leaving only the positivity gate)
+                dev = F.abs(mean_h - mean_t)
+                guard = guard & (F.try_divide(dev, mean_t)
+                                 > cfg.ignore_diff_rate)
+            eligible = (F.col("cnt_t") > cfg.trends_min_count) & \
+                       (F.col("std_t") > 0)
+            pred = pred & _nvl(eligible & band & guard)
+        if 2 in stages:
+            lam = cfg.detect2_lambda_threshold
+            rate = cfg.ignore_diff_rate
 
-        def diff_test(ext: Column, dmean: Column, dstd: Column) -> Column:
-            diff = F.abs(ext - dmean)
-            return (dstd > 0) & (diff > lam * dstd) & \
-                   (diff > rate * F.abs(dmean))
+            def diff_test(ext: str, side: str) -> Column:
+                dmean, dstd = F.col(f"dmean_{side}"), F.col(f"dstd_{side}")
+                diff = F.abs(F.col(ext) - dmean)
+                if cfg.strict_reference_diff_guard:
+                    # signed denominator, NULL (dmean == 0) → +inf: the same
+                    # expression as detect.py's _detect_diff_anomalies
+                    guard = F.coalesce(F.try_divide(diff, dmean),
+                                       F.lit(float("inf"))) > rate
+                else:
+                    guard = diff > rate * F.abs(dmean)
+                return (dstd > 0) & (diff > lam * dstd) & guard
 
-        up = diff_test(F.col("re_max"), F.col("dmean_up"), F.col("dstd_up"))
-        dw = diff_test(F.col("re_min"), F.col("dmean_dw"), F.col("dstd_dw"))
-        pred = pred & (_nvl(up) | _nvl(dw))
-    if 3 in stages:
-        pred = pred & _detect3_pred("", hist_count, hist_count2, cfg)
-    if run4:
-        pred = pred & _detect3_pred("_l", hist_count4, hist_count4_2, cfg)
+            pred = pred & (_nvl(diff_test("re_max", "up"))
+                           | _nvl(diff_test("re_min", "dw")))
+        if 3 in stages:
+            pred = pred & _detect3_pred("", hist_count, hist_count2, cfg,
+                                        peaks)
+        if run4:
+            pred = pred & _detect3_pred("_l", hist_count4, hist_count4_2, cfg,
+                                        peaks)
+        return pred
 
-    return frame.filter(pred).select("itemid")
+    if not (cfg.strict_reference_peaks and (3 in stages or run4)):
+        return frame.filter(predicate(peaks=True)).select("itemid")
+
+    # strict peaks: the anchored-stride walk is a grouped pandas UDF, so it
+    # only sees the candidates that pass with every peak comparison taken as
+    # TRUE (a superset of the survivors); its peaks replace the rangeBetween
+    # ones before the full predicate runs
+    cands = frame.filter(predicate(peaks=False)) \
+        .drop("peak_up", "peak_dw", "peak_up_l", "peak_dw_l").localCheckpoint()
+    keys = cands.select("itemid")
+    envs = ([(trends_df, "")] if 3 in stages else []) + \
+           ([(long_trends_df, "_l")] if run4 else [])
+    for env, tag in envs:
+        env = env.join(keys, "itemid")
+        for col, side, is_up in (("value_max", "up", True),
+                                 ("value_min", "dw", False)):
+            walk = local_peaks_strict(
+                env.select("itemid", "clock", F.col(col).alias("value")),
+                density_window, is_up)
+            cands = cands.join(
+                walk.withColumnRenamed("local_peak", f"peak_{side}{tag}"),
+                "itemid", "left")
+    return cands.filter(predicate(peaks=True)).select("itemid")

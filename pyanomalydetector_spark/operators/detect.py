@@ -1,4 +1,7 @@
-"""The detect1→detect2→detect3→detect4 anomaly cascade, Spark-native.
+"""The per-stage operators of the detect1→detect2→detect3→detect4 anomaly
+cascade, Spark-native. ``detect_cascade`` (operators/cascade_fused.py)
+composes the stages as one predicate plan; these operators back the
+per-stage queries and serve as its test reference.
 
 Reference: /root/reference/data_processing/detector.py. All inputs are
 long-format metric DataFrames ``(itemid, clock, value)`` (the reference's
@@ -284,7 +287,8 @@ def detect3(history_df: DataFrame, trends_df: DataFrame,
                                   density_window, lam1, rate, False, sp)
     # stage_a feeds both the final union and the stage-B anti-join; checkpoint
     # so its (join+window)-heavy subtree runs once and the stage-B plans don't
-    # re-embed it (lineage control, see detect_cascade).
+    # re-embed it (lineage control: without it Catalyst/AQE replanning grows
+    # multiplicatively with every branch that re-embeds the subtree).
     stage_a = a_up.union(a_dw).distinct().localCheckpoint()
 
     hist2 = history_df.join(stage_a, "itemid", "left_anti") \
@@ -294,108 +298,3 @@ def detect3(history_df: DataFrame, trends_df: DataFrame,
     b_dw = _filter_anomal_history(hist2, env_dw, stats_dw, hist_count2,
                                   density_window, lam2, rate, False, sp)
     return stage_a.union(b_up).union(b_dw).distinct()
-
-
-def detect_cascade(history_df: DataFrame, trends_df: DataFrame,
-                   recent_df: DataFrame, cfg: DetectorConfig,
-                   hist_count: int, hist_count2: int,
-                   startep2: int,
-                   long_trends_df: DataFrame | None = None,
-                   hist_count4: int | None = None,
-                   hist_count4_2: int | None = None,
-                   stages: tuple[int, ...] = (1, 2, 3, 4)) -> DataFrame:
-    """The full cascade (detect_anomalies.py:82-113): each stage only sees the
-    previous stage's survivors — a chain of semi-joins, early-exit checked by
-    the driver between stages. ``stages`` mirrors the reference's
-    ``detection_stages`` list (e.g. ``(1, 4)`` is the detect1+detect4 combo of
-    tests/test_detector_all.py:10-12); skipped stages pass survivors through.
-
-    Documented divergence: in the reference, a stage list WITHOUT detect1
-    short-circuits to nothing (detect_anomalies.py:88-89 ``continue`` fires
-    before its own "all items" fallback at :93-94 can run — dead code). We
-    implement that fallback's evident intent: with stage 1 skipped, later
-    stages start from ALL items. An empty ``stages`` yields an empty set,
-    matching the reference.
-
-    detect4 (STAGE_DETECT4, detect_anomalies.py:109-113) is
-    ``detect3(is_long_trend=True)`` — the same envelope cascade over the
-    ``long_trends_retention`` window (detector.py:562-570), with base-clock
-    denominators ``hist_count4``/``hist_count4_2`` computed over that longer
-    span. ``long_trends_df`` is its envelope rollup; stage 4 runs only when
-    both ``4 in stages`` and ``long_trends_df is not None``.
-
-    ``history_df``: short recent window; ``recent_df``: the detect2/3 recent
-    slice; ``trends_df``: envelope rollup.
-    """
-    # Stage boundaries are materialized with localCheckpoint(): survivor key
-    # sets are consumed 2-3× each (early-exit probe + two joins) and, more
-    # importantly, the cascade's lineage otherwise grows multiplicatively —
-    # detect3's four branches each re-embed the detect1+detect2 subtrees and
-    # Catalyst/AQE replanning time explodes (measured 82 s → 5 s at sf0.01 by
-    # truncating here). This is the Spark analog of the reference's
-    # materialized ``history`` cache (detector.py:112-146) and the standard
-    # lineage-control pattern for iterative algorithms.
-    from concurrent.futures import ThreadPoolExecutor
-
-    # stage-boundary materializations are independent Spark jobs — submit
-    # them from threads so the scheduler overlaps their stages instead of
-    # idling cores between sequential jobs (same pattern as run_checks)
-    def ckpt_parallel(*dfs):
-        with ThreadPoolExecutor(max_workers=len(dfs)) as ex:
-            return [f.result() for f in
-                    [ex.submit(lambda d=d: d.localCheckpoint()) for d in dfs]]
-
-    same_recent = recent_df is history_df
-    run4 = 4 in stages and long_trends_df is not None
-    heads = [trends_df, history_df]
-    if not same_recent:
-        heads.append(recent_df)
-    if run4:
-        heads.append(long_trends_df)
-    heads = ckpt_parallel(*heads)
-    trends_df, history_df = heads[0], heads[1]
-    recent_df = history_df if same_recent else heads[2]
-    if run4:
-        long_trends_df = heads[-1]
-
-    survivors = None   # None = all items (reference: empty list → itemIds)
-
-    if 1 in stages:
-        survivors = detect1(history_df, trends_df.select(
-            "itemid", "clock", F.col("value_avg").alias("value")), cfg) \
-            .localCheckpoint()
-        if survivors.isEmpty():
-            return survivors
-
-    # narrowing stays a JOIN against the (checkpointed, tiny) survivor key
-    # set — measured faster than collecting the keys and pushing isin
-    # filters (an InSet predicate re-evaluates per row in every branch; the
-    # hash join probes once and AQE broadcasts the small side anyway)
-    def narrowed(df: DataFrame) -> DataFrame:
-        return df if survivors is None else df.join(survivors, "itemid")
-
-    if 2 in stages:
-        s2 = detect2(narrowed(recent_df), narrowed(trends_df), cfg) \
-            .localCheckpoint()
-        if s2.isEmpty():
-            return s2
-        survivors = s2
-
-    if 3 in stages:
-        h3, t3 = ckpt_parallel(narrowed(recent_df), narrowed(trends_df))
-        s3 = detect3(h3, t3, hist_count, hist_count2, startep2, cfg) \
-            .localCheckpoint()
-        if s3.isEmpty():
-            return s3
-        survivors = s3
-
-    if run4:
-        h4, t4 = ckpt_parallel(narrowed(recent_df), narrowed(long_trends_df))
-        survivors = detect3(h4, t4, hist_count4, hist_count4_2, startep2,
-                            cfg, is_long_trend=True)
-
-    if survivors is None:
-        # no stage ran: the reference emits no anomalies in this case
-        # (detect_anomalies.py:88-89 — the empty list short-circuits run())
-        return history_df.select("itemid").distinct().limit(0)
-    return survivors

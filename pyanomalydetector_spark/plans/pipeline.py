@@ -5,7 +5,8 @@ Maps the benchmark ``events`` table onto the reference's data model
 long-format row, /root/reference/data_getter/data_getter.py:37-40), splits
 history/trend windows around a pinned ``ENDEP`` (the reference pins
 ``endep=1739505598`` in its detector tests, tests/test_detector_all.py:20-53),
-and runs the detect1→2→3 cascade.
+and runs the detect1→2→3→4 cascade (one predicate plan,
+operators/cascade_fused.py).
 
 Window layout (config-derived, mirrors README.md:4 "recent vs past"):
 - trends window  [ENDEP − trends_interval·trends_retention, h_start)
@@ -18,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyanomalydetector_spark.operators.detect import DetectorConfig, detect_cascade
+from pyanomalydetector_spark.operators.cascade_fused import detect_cascade
+from pyanomalydetector_spark.operators.detect import DetectorConfig
 from pyanomalydetector_spark.operators.rollup import tumbling_rollup
 from pyanomalydetector_spark.sources.tables import load_table
 
@@ -85,28 +87,27 @@ def long_trends_window(metrics: DataFrame, cfg: DetectorConfig,
 def detect_pipeline(spark: SparkSession, sf_dir: str,
                     cfg: DetectorConfig | None = None,
                     endep: int = ENDEP,
-                    stages: tuple[int, ...] = (1, 2, 3, 4),
-                    fused: bool = True) -> DataFrame:
+                    stages: tuple[int, ...] = (1, 2, 3, 4)) -> DataFrame:
     """Full cascade over events (detect1→2→3→4, like the reference's default
-    ``detection_stages``); returns the surviving anomaly key set.
+    ``detection_stages``) through the one-plan
+    :func:`~pyanomalydetector_spark.operators.cascade_fused.detect_cascade`
+    (2 scans, ~3 jobs); returns the surviving anomaly key set.
 
-    ``fused=True`` (default) runs the single-plan predicate-algebra cascade
-    (operators/cascade_fused.py — 2 scans, ~3 jobs); ``fused=False`` keeps
-    the staged semi-join chain, which also early-exits between stages like
-    the reference driver loop (the right call when most runs die at stage 1).
-    Both produce the same survivor set (tests/test_cascade_fused.py).
+    The envelope rollups are materialized here (localCheckpoint): the
+    cascade reads each of them from several plan branches.
     """
     cfg = cfg or DetectorConfig()
     metrics = events_metrics(spark, sf_dir)
     history, trends, hist_count, hist_count2, startep2 = \
         split_windows(metrics, cfg, endep)
     long_trends = hist_count4 = hist_count4_2 = None
+    if 4 in stages:
+        long_trends, hist_count4, hist_count4_2 = \
+            long_trends_window(metrics, cfg, endep)
+        long_trends = long_trends.localCheckpoint()
 
-    strict = (cfg.strict_reference_peaks or cfg.strict_reference_diff_guard
-              or cfg.strict_reference_detect1_guard)
     t_start = endep - cfg.trends_interval * cfg.trends_retention
-    if fused and not strict and 4 in stages \
-            and t_start % cfg.trends_interval == 0 \
+    if long_trends is not None and t_start % cfg.trends_interval == 0 \
             and cfg.long_trends_retention >= cfg.trends_retention:
         # Shared-scan path: the short trends window is a bucket-aligned
         # subrange of the long one, so ONE rollup shuffle serves both — the
@@ -115,33 +116,11 @@ def detect_pipeline(spark: SparkSession, sf_dir: str,
         # t_start sits on a bucket boundary AND the long window actually
         # covers the short one, i.e. long_trends_retention >=
         # trends_retention; a shorter long window would silently truncate
-        # the short env to [t_start4, ...), so that config falls through
-        # to the two-rollup path below).
-        from pyanomalydetector_spark.operators.cascade_fused import \
-            detect_cascade_fused
-        long_trends, hist_count4, hist_count4_2 = \
-            long_trends_window(metrics, cfg, endep)
-        long_trends = long_trends.localCheckpoint()
+        # the short env to [t_start4, ...), so that config keeps its own
+        # short rollup).
         trends = long_trends.filter(F.col("clock") >= t_start)
-        return detect_cascade_fused(history, trends, history, cfg,
-                                    hist_count, hist_count2, startep2,
-                                    long_trends_df=long_trends,
-                                    hist_count4=hist_count4,
-                                    hist_count4_2=hist_count4_2,
-                                    stages=stages, materialize_envs=False)
-
-    if 4 in stages:
-        long_trends, hist_count4, hist_count4_2 = \
-            long_trends_window(metrics, cfg, endep)
-    if fused and not strict:
-        from pyanomalydetector_spark.operators.cascade_fused import \
-            detect_cascade_fused
-        return detect_cascade_fused(history, trends, history, cfg,
-                                    hist_count, hist_count2, startep2,
-                                    long_trends_df=long_trends,
-                                    hist_count4=hist_count4,
-                                    hist_count4_2=hist_count4_2,
-                                    stages=stages)
+    else:
+        trends = trends.localCheckpoint()
     return detect_cascade(history, trends, history, cfg,
                           hist_count, hist_count2, startep2,
                           long_trends_df=long_trends,

@@ -237,71 +237,3 @@ def stateful_running_stats(stream: DataFrame, id_col: str = "itemid",
     return stream.groupBy(id_col).applyInPandasWithState(
         update, out_schema, state_schema, "Update", timeout_conf)
 
-
-def stateful_running_stats_tws(stream: DataFrame, id_col: str = "itemid",
-                               value_col: str = "value",
-                               ttl_ms: int | None = None) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` realization of
-    :func:`stateful_running_stats` — the state-store-v2 API (RocksDB-backed
-    ValueState, per-state TTL instead of a processor-wide timeout). Same
-    contract: per-key running Bessel mean/std from mergeable ``(cnt, Σx,
-    Σx²)`` state, Update output, streaming ≡ batch recompute (pinned in
-    tests/test_streaming.py next to the applyInPandasWithState twin).
-
-    State posture: one 24-byte ValueState row per key (O(keys), never
-    O(rows)); ``ttl_ms`` bounds the store to the active working set —
-    expired keys restart from zero, matching the v1 eviction semantics.
-
-    Requires the RocksDB state store provider (the only provider
-    transformWithState supports); the caller's session must set
-    ``spark.sql.streaming.stateStore.providerClass`` accordingly. The
-    Python side of the transformWithState protocol additionally needs the
-    ``protobuf`` package — absent in this sandbox, so the test is gated
-    (importorskip) the same way the Iceberg-catalog tests are; the v1
-    ``applyInPandasWithState`` twin above is the fully-exercised path here.
-    """
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    id_type = stream.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, cnt long, mean double, std double"
-
-    class _RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "cnt long, s double, q double", ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            cur = self._state.get() if self._state.exists() else None
-            cnt, s, q = cur if cur is not None else (0, 0.0, 0.0)
-            for pdf in rows:
-                v = pdf[value_col].astype(float).to_numpy()
-                v = v[np.isfinite(v)]                  # null/inf scrub
-                cnt += int(v.size)
-                s += float(v.sum())
-                q += float((v * v).sum())
-            self._state.update((cnt, s, q))
-            if cnt == 0:
-                return iter(())
-            mean = s / cnt
-            var = (q - s * s / cnt) / (cnt - 1) if cnt > 1 else 0.0
-            return iter([pd.DataFrame(
-                {id_col: [key[0]], "cnt": [cnt], "mean": [mean],
-                 "std": [math.sqrt(max(var, 0.0))]})])
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(id_col).transformWithStateInPandas(
-        statefulProcessor=_RunningStats(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        # state TTL is only legal in ProcessingTime mode — a TTL under
-        # TimeMode.None fails at query start
-        timeMode="ProcessingTime" if ttl_ms else "None",
-    )

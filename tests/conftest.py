@@ -21,3 +21,8 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def sf01_dir():
+    return SF_DIR_CORRECTNESS

@@ -422,7 +422,7 @@ def test_detect1_plus_detect4_cascade_reference(spark):
     with stages=(1, 4): detect1 survivors feed detect4 directly, skipped
     stages pass through. detect1 runs with the strict reference guard
     (detector.py:218's literal precedence-bug semantics)."""
-    from pyanomalydetector_spark.operators.detect import detect_cascade
+    from pyanomalydetector_spark.operators import detect_cascade
 
     endep4 = ENDEP
     t_start4 = endep4 - 86400 * 60

@@ -223,73 +223,6 @@ def test_stateful_idle_timeout_evicts_and_restarts(spark, tmp_path):
     assert cnts == [3, 2], cnts
 
 
-def test_transformwithstate_running_stats(spark, tmp_path):
-    """The state-store-v2 operator (transformWithStateInPandas, RocksDB
-    ValueState) must produce the same running stats as a from-scratch batch
-    recompute over two micro-batches — the same oracle the
-    applyInPandasWithState twin is pinned by."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState's Python protocol needs protobuf, "
-               "not shipped in this container (same class of gate as the "
-               "Iceberg catalog jars)")
-    from pyanomalydetector_spark.streaming.incremental import (
-        stateful_running_stats_tws,
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    try:
-        inp = str(tmp_path / "in")
-        schema = "itemid long, clock long, value double"
-        rows1 = [(i % 4, c, float((i * 7 + c) % 23))
-                 for i in range(8) for c in range(12)]
-        rows2 = [(i % 4, 100 + c, float((i * 11 + c) % 19))
-                 for i in range(8) for c in range(9)]
-        spark.createDataFrame(rows1, schema).coalesce(1) \
-             .write.mode("append").parquet(inp)
-
-        captured = []
-
-        def drain():
-            stream = spark.readStream.schema(schema).parquet(inp)
-            out = stateful_running_stats_tws(stream)
-            q = (out.writeStream
-                    .foreachBatch(
-                        lambda df, bid: captured.extend(df.collect()))
-                    .outputMode("update")
-                    .option("checkpointLocation", str(tmp_path / "ck"))
-                    .trigger(availableNow=True).start())
-            _await_and_stop(q, 180)
-
-        drain()
-        spark.createDataFrame(rows2, schema).coalesce(1) \
-             .write.mode("append").parquet(inp)
-        drain()
-
-        got = {}
-        for r in captured:
-            if r["itemid"] not in got or r["cnt"] > got[r["itemid"]]["cnt"]:
-                got[r["itemid"]] = r
-
-        expected = finalize_mean_std(sufficient_stats(
-            spark.createDataFrame(rows1 + rows2, schema),
-            ["itemid"], "value"))
-        for e in expected.collect():
-            g = got[e["itemid"]]
-            assert g["cnt"] == e["cnt"]
-            assert round(g["mean"], 9) == round(e["mean"], 9)
-            assert round(g["std"], 9) == round(e["std"], 9)
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_state_versions_are_pruned(spark, tmp_path):
     """Each micro-batch writes a NEW state version; superseded versions must
     be dropped after the pointer swap (keeping current + one fallback), or

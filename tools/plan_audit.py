@@ -34,7 +34,7 @@ AUDIT = [
     # round-4 scale paths with an inspectable returned plan (the LSH and
     # incremental-minhash queries return a localCheckpoint scan — their
     # pipeline plans are gated in tests instead)
-    "seq_length_percentiles_sketch", "emb_ann_ivf_indexed",
+    "seq_length_percentiles_sketch", "emb_ann_ivf_indexed", "ev_cascade",
 ]
 
 JOIN_NODES = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
