@@ -133,27 +133,11 @@ def _q_seq_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_seq_unique_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uniqueness check (salted two-phase groupBy) — duplicate doc_ids."""
+    """Uniqueness check (direct (partition, key) count groupBy) — duplicate
+    doc_ids. Also registered as ``seq_unique_violations_digest``, the name
+    of a deleted digest-prefilter route."""
     seq = load_sequences(spark, sf_dir)
     res = run_checks(seq, [Check("uniq", "unique", {"key": "doc_id"})])
-    return res.violations.select(
-        "partition_id", "doc_id",
-        F.col("observed").cast("bigint").alias("dup_cnt"),
-    )
-
-
-def _q_seq_unique_violations_digest(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
-    """Uniqueness via the opt-in digest-prefilter route (checks/core.py:
-    _unique_per_part_digest — the network-bound-cluster shuffle shape:
-    8-byte digests through the all-to-all, exact confirm of colliding
-    groups only). Outputs are EXACT by construction, so the same brute
-    SQL oracle applies; equivalence to the direct route is additionally
-    pinned in tests/test_checks.py."""
-    seq = load_sequences(spark, sf_dir)
-    res = run_checks(seq, [Check("uniq", "unique",
-                                 {"key": "doc_id",
-                                  "digest_prefilter": True})])
     return res.violations.select(
         "partition_id", "doc_id",
         F.col("observed").cast("bigint").alias("dup_cnt"),
@@ -1148,7 +1132,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ev_topn": _q_ev_topn,
         "emb_ann_ivf": _q_emb_ann_ivf,
         "emb_cosine_pairs": _q_emb_cosine_pairs,
-        "seq_unique_violations_digest": _q_seq_unique_violations_digest,
+        "seq_unique_violations_digest": _q_seq_unique_violations,
         "seq_token_range": _q_seq_token_range,
     }
 
@@ -2162,8 +2146,7 @@ def oracle_sql() -> dict[str, str]:
               AND len(list_filter(tokens,
                       t -> t IS NULL OR t < 2000 OR t >= 48000)) > 0
         """,
-        # digest-prefilter route emits EXACT outputs — same oracle as the
-        # direct unique check
+        # the direct unique check under its former digest-route name
         "seq_unique_violations_digest": f"""
             SELECT source AS partition_id, doc_id, COUNT(*) AS dup_cnt
             FROM {_SEQ}

@@ -26,8 +26,9 @@ Check kinds and their reference lineage:
   there: ``mean_t > 0 & (...)`` binds as ``mean_t > (0 & (...))``; we
   implement the *intended* semantics ``mean_t > 0 AND reldiff > rate`` and
   pin that choice in tests).
-- ``unique``           — doc_id uniqueness via two-phase salted aggregation
-  (skew-proof groupBy; exact duplicate emission).
+- ``unique``           — doc_id uniqueness via one direct (partition, key)
+  count aggregation (map-side combine absorbs hot keys; exact duplicate
+  emission).
 - ``referential``      — membership of ``source`` in an allowed dimension
   (models/anomalies.py:94-104 anti-join discipline).
 - ``n_tok_consistency``— metadata invariant ``n_tok == size(tokens)``.
@@ -47,7 +48,8 @@ the kinds that need their own shuffle (``unique``, ``token_invariant``,
 
 Scale posture: every check is a groupBy/join plan whose shuffled data is
 O(#partitions) or O(#violations), never O(rows) beyond the initial scan; the
-uniqueness check pre-aggregates behind a salt to keep hot keys off one reducer.
+uniqueness check's map-side combine sends a hot key's reducer one partial
+count per map task, not one row per copy.
 """
 
 from __future__ import annotations
@@ -105,7 +107,7 @@ class CheckResult:
         for frame in self.cached:
             frame.unpersist()
 
-    def materialize(self, parallel: bool = True) -> tuple[int, int]:
+    def materialize(self) -> tuple[int, int]:
         """Count verdicts and violations; returns ``(n_verdicts, n_viols)``.
 
         Persisted intermediates are materialized FIRST, so the two result
@@ -120,10 +122,6 @@ class CheckResult:
         shuffles overlap instead of queueing (measured 53 s → ~44 s at
         local[4]/32M rows).
         """
-        if not parallel:
-            for frame in self.cached:
-                frame.count()
-            return self.verdicts.count(), self.violations.count()
         from concurrent.futures import ThreadPoolExecutor
         if self.cached:
             with ThreadPoolExecutor(max_workers=len(self.cached)) as ex:
@@ -186,7 +184,6 @@ def _finish_violations(v: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------- checks ----
 
 def _unique_per_part(df: DataFrame, key: str, pcol: str,
-                     salt_buckets: int = 0,
                      max_dup_emit: int = 100_000) -> DataFrame:
     """Lazy per-partition uniqueness rollup: ``(partition_id, n_keys,
     n_dup_keys, rows_scanned, _dups)``.
@@ -204,34 +201,16 @@ def _unique_per_part(df: DataFrame, key: str, pcol: str,
     persists it, hiding the shared exchange behind an InMemoryTableScan
     from consumers).
 
-    Considered and measured (round 4): a digest-prefilter variant (shuffle
-    ``xxhash64(key)`` — 8 B — then re-scan + exact-confirm only colliding
-    hash groups, the token_invariant/exact-dedup discipline). The hash
-    shuffle alone is 1.6× faster (9.9 s → 6.2 s at 32M/local[32]), but the
-    confirm pass needs a second full (pcol, key) scan (~3.5 s), landing at
-    parity locally. On a multi-executor cluster the trade leans the other
-    way (scans are node-local, shuffles are all-to-all network), so a
-    deployment bottlenecked on the unique shuffle's network volume should
-    revisit it; here the single-shuffle direct aggregation is kept — one
-    scan, exact by construction, and the salt knob still applies.
+    One direct ``(partition, key)`` count aggregation, with no salted or
+    digest-prefiltered variant: the hash aggregate's map-side combine
+    already neutralises a hot key, and an 8-byte digest shuffle with exact
+    confirm lost to it at 32M rows of ~120-byte keys (local[4], medians of
+    5 alternating pairs: 42.4 s vs 35.1 s; a salt on one key holding a
+    quarter of the rows: 65.2 s vs 34.9 s).
     """
-    if salt_buckets > 0:
-        # the salt only needs to spread a hot key's rows across buckets;
-        # monotonically_increasing_id alone is already per-row unique
-        # (hashing a data column in would also crash key-generic callers
-        # on frames without that column)
-        salted = df.select(
-            F.col(pcol).alias("partition_id"), F.col(key),
-            F.pmod(F.xxhash64(F.monotonically_increasing_id()),
-                   F.lit(salt_buckets)).alias("_salt"),
-        )
-        partial = salted.groupBy("partition_id", key, "_salt") \
-                        .agg(F.count(F.lit(1)).alias("c"))
-        counts = partial.groupBy("partition_id", key).agg(F.sum("c").alias("cnt"))
-    else:
-        counts = df.select(F.col(pcol).alias("partition_id"), F.col(key)) \
-                   .groupBy("partition_id", key) \
-                   .agg(F.count(F.lit(1)).alias("cnt"))
+    counts = df.select(F.col(pcol).alias("partition_id"), F.col(key)) \
+               .groupBy("partition_id", key) \
+               .agg(F.count(F.lit(1)).alias("cnt"))
 
     # ONE pass over the (large) per-key counts: the scalar rollup and the
     # duplicate list are two branches of ONE plan over the same counts
@@ -279,82 +258,6 @@ def _attach_dup_lists(scalars: DataFrame, dup_rows: DataFrame, key: str,
         "left").drop("_dp")
 
 
-def _unique_per_part_digest(df: DataFrame, key: str, pcol: str,
-                            max_dup_emit: int = 100_000) -> DataFrame:
-    """Digest-prefilter uniqueness rollup — same output contract as
-    :func:`_unique_per_part` (``(partition_id, n_keys, n_dup_keys,
-    rows_scanned, _dups)``, all EXACT), different shuffle shape.
-
-    Two passes: (1) shuffle only an 8-byte ``xxhash64(partition, key)``
-    digest and count per digest — the big all-to-all moves 8 B/row instead
-    of the full key payload (the round-4 measurement in
-    :func:`_unique_per_part`'s docstring: the hash shuffle alone is 1.6×
-    faster at 32M rows); (2) semi-join the scan back to the COLLIDING
-    digests only and group exactly by (partition, real key) — duplicate
-    counts and dup lists are exact by construction, and a 64-bit collision
-    between distinct keys costs only a wasted exact-confirm row (it groups
-    to cnt=1 and is dropped), never a wrong answer.
-
-    Exactness bookkeeping for ``n_keys``: distinct digests undercount by
-    one per colliding digest that holds two distinct real keys, so
-    ``n_keys = (distinct digests − colliding digests) + (distinct real
-    keys inside colliding digests)`` — the last two terms come from the
-    confirm pass.
-
-    The trade vs the direct aggregation, measured at 32M rows/local[32]
-    (round 5, warm min-of-3): direct 5.3 s, digest 9.2 s — locally the
-    shuffle is memory-speed so the payload saving buys nothing and the
-    confirm re-scan is pure overhead. The digest route exists for
-    network-shuffled clusters where the all-to-all is the bottleneck and
-    the key is wider than its 8-byte digest (URLs, long doc ids): there
-    the big shuffle's bytes drop by the key/digest width ratio and the
-    confirm pass touches only colliding groups. Opt-in
-    (``digest_prefilter: True``), never the default.
-    """
-    base = df.select(F.col(pcol).alias("partition_id"), F.col(key))
-    # one digest over (partition, key): the confirm semi-join can then key
-    # on the digest alone (never NULL — xxhash64 of a NULL field is the
-    # seed hash), sidestepping NULL-partition equality; a cross-partition
-    # digest collision only adds a wasted exact-confirm row
-    hashed = base.withColumn("_ph", F.xxhash64("partition_id", F.col(key)))
-    hcounts = hashed.groupBy("partition_id", "_ph") \
-                    .agg(F.count(F.lit(1)).alias("cnt"))
-    scalars0 = hcounts.groupBy("partition_id").agg(
-        F.count(F.lit(1)).alias("_n_digests"),
-        F.sum(F.when(F.col("cnt") > 1, 1).otherwise(0)).alias("_n_colliding"),
-        F.sum("cnt").alias("rows_scanned"),
-    )
-    # the colliding set keys on (partition, digest), NULL-SAFE on the
-    # partition: a digest-only semi-join could pull in a row from ANOTHER
-    # partition that shares the digest by 64-bit accident, and that row
-    # would inflate its own partition's n_keys via _k_distinct (its digest
-    # is already counted in _n_digests)
-    coll = hcounts.filter(F.col("cnt") > 1) \
-                  .select(F.col("partition_id").alias("_kp"),
-                          F.col("_ph").alias("_kh"))
-    confirm = (hashed.join(
-            coll,
-            (hashed["_ph"] == coll["_kh"])
-            & hashed["partition_id"].eqNullSafe(coll["_kp"]), "left_semi")
-                     .groupBy("partition_id", key)
-                     .agg(F.count(F.lit(1)).alias("cnt")))
-    per_confirm = confirm.groupBy(F.col("partition_id").alias("_cp")).agg(
-        F.count(F.lit(1)).alias("_k_distinct"),
-        F.sum(F.when(F.col("cnt") > 1, 1).otherwise(0)).alias("n_dup_keys"),
-    )
-    scalars = (scalars0.join(
-            per_confirm,
-            scalars0["partition_id"].eqNullSafe(per_confirm["_cp"]), "left")
-        .drop("_cp")
-        .na.fill({"_k_distinct": 0, "n_dup_keys": 0})
-        .select("partition_id",
-                (F.col("_n_digests") - F.col("_n_colliding")
-                 + F.col("_k_distinct")).alias("n_keys"),
-                "n_dup_keys", "rows_scanned"))
-    return _attach_dup_lists(scalars, confirm.filter(F.col("cnt") > 1),
-                             key, max_dup_emit)
-
-
 def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     """Key-uniqueness check with exact duplicate emission.
 
@@ -363,29 +266,10 @@ def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     and a *hot duplicate key* (one doc_id with millions of copies) is
     neutralized by the hash aggregate's map-side combine: each map task emits
     one partial count per key, so the hot key's reducer receives #map-tasks
-    rows, not #duplicates. The default is therefore the single-shuffle direct
-    aggregation (measured ~2× faster than two-phase at 32M rows — the salt
-    phase doubles shuffled volume for no reduction when keys are unique).
-
-    ``salt_buckets > 0`` enables the classic two-phase salted aggregation for
-    the cases where pre-spreading genuinely matters: non-combinable payloads
-    (e.g. collecting the duplicate rows themselves) or sort-based fallback
-    paths. Skewed *joins* elsewhere in the engine are covered by AQE
-    (session.py: spark.sql.adaptive.skewJoin.enabled).
-
-    ``digest_prefilter: True`` routes to :func:`_unique_per_part_digest` —
-    the all-to-all shuffles an 8-byte digest instead of the key payload and
-    only colliding digest groups are exact-confirmed. Same exact outputs;
-    the right trade on network-shuffled clusters with wide keys (see the
-    variant's docstring). Mutually exclusive with ``salt_buckets`` (digest
-    groups are high-cardinality by construction, salting adds nothing).
+    rows, not #duplicates. Skewed *joins* elsewhere in the engine are
+    covered by AQE (session.py: spark.sql.adaptive.skewJoin.enabled).
     """
     key = check.params.get("key", "doc_id")
-    salt_buckets = int(check.params.get("salt_buckets", 0))
-    digest_prefilter = bool(check.params.get("digest_prefilter", False))
-    if digest_prefilter and salt_buckets:
-        raise ValueError("unique check: digest_prefilter and salt_buckets "
-                         "are mutually exclusive")
     # ``max_dup_emit``: per-partition cap on EMITTED duplicate rows (the
     # verdict's n_violations stays exact; see _unique_per_part)
     max_dup_emit = int(check.params.get("max_dup_emit", 100_000))
@@ -408,12 +292,8 @@ def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     # as one task; it stays parallel from one split of input per task up
     # (see sized_to_input). The (partition, key) count shuffle below it
     # always stays parallel.
-    if digest_prefilter:
-        per_part = _unique_per_part_digest(df, key, pcol, max_dup_emit)
-    else:
-        per_part = _unique_per_part(df, key, pcol, salt_buckets,
-                                    max_dup_emit)
-    per_part = sized_to_input(per_part, df).persist()
+    per_part = sized_to_input(_unique_per_part(df, key, pcol, max_dup_emit),
+                              df).persist()
 
     dups = per_part.select(
         "partition_id", F.explode("_dups").alias("d")

@@ -294,6 +294,17 @@ class CheckpointStore:
             return None
         return PinnedBaseline(d["moments"], d["psi"], d["ks_value_cols"])
 
+    def pinned_suite(self, df: DataFrame, checks: list[Check], shash: str,
+                     snap: str) -> list[Check]:
+        """``checks`` with their global baselines pinned: the stored
+        baseline of ``(shash, snap)``, or — when there is none — one
+        computed from ``df`` and saved first."""
+        bl = self.load_baseline(shash, snap)
+        if bl is None:
+            bl, ks_counts = compute_baseline(df, checks)
+            self.save_baseline(shash, snap, bl, ks_counts)
+        return pin_suite(checks, bl, self)
+
     def ks_counts(self, value_col: str) -> DataFrame:
         d = value_col   # legacy layout: unversioned dir named by the column
         if os.path.exists(self.baseline_json):
@@ -407,11 +418,7 @@ def run_with_checkpoint(df: DataFrame, checks: list[Check],
     shash = suite_hash(checks)
     run_id = time.time_ns()
 
-    bl = store.load_baseline(shash, snapshot_id)
-    if bl is None:
-        bl, ks_counts = compute_baseline(df, checks)
-        store.save_baseline(shash, snapshot_id, bl, ks_counts)
-    pinned = pin_suite(checks, bl, store)
+    pinned = store.pinned_suite(df, checks, shash, snapshot_id)
 
     done = store.done_partitions(shash, snapshot_id)
     # NULL-SAFE skip-done: a checkpointed NULL partition must be skipped

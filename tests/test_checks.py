@@ -518,46 +518,6 @@ def test_token_invariant_conflicting_snapshot_duplicates_canonical(spark):
     assert res2.violations.count() == 1
 
 
-def test_unique_digest_prefilter_equals_direct(spark, seq):
-    """The opt-in digest-prefilter unique route must produce EXACTLY the
-    direct aggregation's outputs — verdicts (n_keys/n_dup_keys/
-    rows_scanned all exact despite the 8-byte digest shuffle) and the
-    capped duplicate lists — on the fixture with injected dups and on a
-    NULL-partition/NULL-key frame."""
-    direct = run_checks(seq, [Check("u", "unique", {"key": "doc_id"})])
-    digest = run_checks(seq, [Check("u", "unique",
-                                    {"key": "doc_id",
-                                     "digest_prefilter": True})])
-    as_set = lambda df: {tuple(r) for r in df.collect()}
-    assert as_set(digest.verdicts) == as_set(direct.verdicts)
-    assert as_set(digest.violations) == as_set(direct.violations)
-
-    # NULL partition and NULL key rows must group/attach identically
-    rows = [("k1", [1], 1, None), ("k1", [1], 1, None),
-            (None, [1], 1, None), (None, [1], 1, None),
-            ("k2", [1], 1, "s0"), ("k2", [1], 1, "s0"), ("k3", [1], 1, "s0")]
-    df = spark.createDataFrame(rows, _SCHEMA)
-    d1 = run_checks(df, [Check("u", "unique", {"key": "doc_id"})])
-    d2 = run_checks(df, [Check("u", "unique", {"key": "doc_id",
-                                               "digest_prefilter": True})])
-    assert as_set(d2.verdicts) == as_set(d1.verdicts)
-    assert as_set(d2.violations) == as_set(d1.violations)
-
-    # scalar internals too (n_keys is not surfaced by the verdict):
-    from pyanomalydetector_spark.checks.core import (
-        _unique_per_part, _unique_per_part_digest)
-    a = _unique_per_part(df, "doc_id", "source") \
-        .select("partition_id", "n_keys", "n_dup_keys", "rows_scanned")
-    b = _unique_per_part_digest(df, "doc_id", "source") \
-        .select("partition_id", "n_keys", "n_dup_keys", "rows_scanned")
-    assert as_set(a) == as_set(b)
-
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        run_checks(df, [Check("u", "unique",
-                              {"key": "doc_id", "digest_prefilter": True,
-                               "salt_buckets": 4})])
-
-
 def test_ntok_consistency_null_metadata_is_a_violation(spark, tmp_path):
     """NULL-safety of the metadata invariant: a row where one side is NULL
     and the other isn't CONTRADICTS n_tok == size(tokens) and must count
@@ -580,23 +540,21 @@ def test_ntok_consistency_null_metadata_is_a_violation(spark, tmp_path):
     assert verd["s2"]["n_violations"] == 1 and not verd["s2"]["passed"]
 
 
-def test_salted_unique_is_key_generic(spark):
-    """The salted uniqueness path must work on ANY frame with the named
-    key (pre-fix it hashed a hard-coded n_tok column into the salt and
-    crashed on frames without one); salted ≡ unsalted output."""
+def test_unique_is_key_generic(spark):
+    """The uniqueness check works on ANY frame with the named key — here
+    ``event_id`` on a frame with no ``doc_id`` and no ``n_tok`` column."""
     df = spark.createDataFrame(
         [("e1", "s1"), ("e1", "s1"), ("e2", "s1"), ("e3", "s2"), ("e3", "s2")],
         "event_id string, source string")
-    salted = run_checks(df, [Check("u", "unique",
-                                   {"key": "event_id", "salt_buckets": 8})])
-    plain = run_checks(df, [Check("u", "unique", {"key": "event_id"})])
-    key = lambda res: sorted(
+    res = run_checks(df, [Check("u", "unique", {"key": "event_id"})])
+    assert sorted(
         (r["partition_id"], r["passed"], r["observed"], r["n_violations"])
-        for r in res.verdicts.collect())
-    assert key(salted) == key(plain)
-    assert {r["doc_id"] for r in salted.violations.collect()} == \
-           {r["doc_id"] for r in plain.violations.collect()} == {"e1", "e3"}
-    salted.unpersist(); plain.unpersist()
+        for r in res.verdicts.collect()) == [
+        ("s1", False, 1.0, 1), ("s2", False, 1.0, 1)]
+    assert sorted((r["doc_id"], r["observed"])
+                  for r in res.violations.collect()) == [("e1", "2"),
+                                                         ("e3", "2")]
+    res.unpersist()
 
 
 def test_token_range_semantics_both_routes(spark, tmp_path):

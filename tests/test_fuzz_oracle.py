@@ -65,15 +65,6 @@ def test_suite_matches_duckdb_on_empty_table(spark, tmp_path):
     _compare(spark, [], tmp_path, "empty")
 
 
-# Alternate execution routes must hit the SAME oracle: route ≡ route
-# equivalences (salted ≡ unsalted, digest ≡ direct) are satisfied trivially
-# by a shared semantic bug.
-ROUTE_OVERRIDES = {
-    "salted_unique": ("unique", {"salt_buckets": 4}),
-    "digest_unique": ("unique", {"digest_prefilter": True}),
-}
-
-
 def _suite_with(kind: str, extra: dict):
     suite = default_suite(ALLOWED)
     out = []
@@ -84,15 +75,6 @@ def _suite_with(kind: str, extra: dict):
             c = type(c)(c.check_id, c.kind, params)
         out.append(c)
     return out
-
-
-@pytest.mark.parametrize("route", sorted(ROUTE_OVERRIDES))
-def test_route_variants_match_duckdb(spark, tmp_path, route):
-    kind, extra = ROUTE_OVERRIDES[route]
-    suite = _suite_with(kind, extra)
-    _compare(spark, _random_rows(19), tmp_path, f"{route}_r", suite=suite)
-    _compare(spark, DEGENERATE["null_island"], tmp_path, f"{route}_n",
-             suite=suite)
 
 
 @pytest.mark.parametrize("source", ["explicit", "pinned"])

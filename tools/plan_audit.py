@@ -159,12 +159,15 @@ def main() -> None:
         "  aggregate (e.g. PSI's partition histogram, minhash's candidate",
         "  shingle frame): the underlying file is read ONCE when the cache",
         "  builds; downstream branches replay the cache, not the scan.",
-        "- seq_token_invariant and seq_unique_violations show near-zero",
-        "  shuffles because their single digest/counts rollup materializes",
-        "  at plan-build time (localCheckpoint) and feeds every consumer",
-        "  exactly once; the rollup's own plan (one pruned scan per side,",
-        "  digests-only 24-byte shuffles, pure HashAggregate, exact-confirm",
-        "  gated to candidates) is gated in tests/test_explain_plans.py.",
+        "- seq_unique_violations lists no shuffle: its counts rollup is a",
+        "  lazily persisted frame (counted first by CheckResult.materialize), so",
+        "  the audited plan reads it through an InMemoryTableScan and every",
+        "  consumer replays the one cache. seq_token_invariant's digest rollup",
+        "  materializes at plan-build time (localCheckpoint); its shuffles are",
+        "  the violation path's digest join, re-derived over the failing",
+        "  partitions only. Each rollup's own plan (one pruned scan per side,",
+        "  pure HashAggregate, digests-only shuffles for token_invariant) is",
+        "  gated in tests/test_explain_plans.py.",
         "- jdbc_rollup's scan is a JDBCRelation with the clock range pushed",
         "  into the database (see tests/test_jdbc_source.py for the starred",
         "  PushedFilters assertions).",

@@ -8,7 +8,7 @@ arithmetic only, no RNG, no external data) big enough that executor
 parallelism — not job overhead — dominates: default 2M rows, ~32 tokens each.
 One fixture-defect family per check kind is injected by modular arithmetic so
 every check does real work. ``source`` is deliberately skewed (src0 holds
-~20% of rows) to exercise the salted/AQE skew handling.
+~20% of rows) to exercise map-side combine and AQE skew handling.
 
 Usage:  python tools/scaling_bench.py [n_rows]
         python tools/scaling_bench.py --run <cores> <n_rows>   (one sample)
