@@ -55,6 +55,7 @@ count per map task, not one row per copy.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -84,6 +85,51 @@ VIOLATION_SCHEMA = StructType([
     StructField("observed", StringType()),
     StructField("expected", StringType()),
 ])
+
+
+def _sq(s: str) -> str:
+    """SQL single-quoted string literal."""
+    return "'" + str(s).replace("'", "''") + "'"
+
+
+def _d(x: float) -> str:
+    """Exact DOUBLE literal: repr() is shortest-round-trip, so the parsed
+    double is bit-identical to the Python float F.lit() would have sent
+    (bare decimal literals parse as DECIMAL in Spark SQL — never use them)."""
+    return f"CAST('{repr(float(x))}' AS DOUBLE)"
+
+
+def verdict_select(frame: DataFrame, check_id: str, passed: str,
+                   observed: str, expected: str, threshold: str,
+                   n_violations: str, rows_scanned: str) -> DataFrame:
+    """The one projection to :data:`VERDICT_SCHEMA`: ``frame`` carries a
+    ``partition_id`` column, every other argument but ``check_id`` (a plain
+    check id) is a SQL expression over ``frame``. One ``selectExpr`` — one
+    py4j round trip — per verdict frame."""
+    return frame.selectExpr(
+        "CAST(partition_id AS STRING) AS partition_id",
+        f"{_sq(check_id)} AS check_id",
+        f"CAST({passed} AS BOOLEAN) AS passed",
+        f"CAST({observed} AS DOUBLE) AS observed",
+        f"CAST({expected} AS DOUBLE) AS expected",
+        f"CAST({threshold} AS DOUBLE) AS threshold",
+        f"CAST({n_violations} AS BIGINT) AS n_violations",
+        f"CAST({rows_scanned} AS BIGINT) AS rows_scanned",
+    )
+
+
+def violation_select(frame: DataFrame, check_id: str, doc_id: str,
+                     observed: str, expected: str) -> DataFrame:
+    """The one projection to :data:`VIOLATION_SCHEMA`: ``frame`` carries a
+    ``partition_id`` column, every other argument is a SQL expression over
+    ``frame`` (``check_id`` included — the fused pass reads it per row)."""
+    return frame.selectExpr(
+        "CAST(partition_id AS STRING) AS partition_id",
+        f"CAST({check_id} AS STRING) AS check_id",
+        f"CAST({doc_id} AS STRING) AS doc_id",
+        f"CAST({observed} AS STRING) AS observed",
+        f"CAST({expected} AS STRING) AS expected",
+    )
 
 
 @dataclass(frozen=True)
@@ -157,30 +203,6 @@ def sized_to_input(frame: DataFrame, df: DataFrame) -> DataFrame:
         else frame
 
 
-def _finish_verdicts(v: DataFrame) -> DataFrame:
-    """Project to the uniform verdict schema (column order + types)."""
-    return v.select(
-        F.col("partition_id").cast("string"),
-        F.col("check_id").cast("string"),
-        F.col("passed").cast("boolean"),
-        F.col("observed").cast("double"),
-        F.col("expected").cast("double"),
-        F.col("threshold").cast("double"),
-        F.col("n_violations").cast("long"),
-        F.col("rows_scanned").cast("long"),
-    )
-
-
-def _finish_violations(v: DataFrame) -> DataFrame:
-    return v.select(
-        F.col("partition_id").cast("string"),
-        F.col("check_id").cast("string"),
-        F.col("doc_id").cast("string"),
-        F.col("observed").cast("string"),
-        F.col("expected").cast("string"),
-    )
-
-
 # ---------------------------------------------------------------- checks ----
 
 def _unique_per_part(df: DataFrame, key: str, pcol: str,
@@ -225,23 +247,13 @@ def _unique_per_part(df: DataFrame, key: str, pcol: str,
         F.sum(F.when(F.col("cnt") > 1, 1).otherwise(0)).alias("n_dup_keys"),
         F.sum("cnt").alias("rows_scanned"),
     )
-    return _attach_dup_lists(scalars, counts.filter(F.col("cnt") > 1),
-                             key, max_dup_emit)
-
-
-def _attach_dup_lists(scalars: DataFrame, dup_rows: DataFrame, key: str,
-                      max_dup_emit: int) -> DataFrame:
-    """Attach the capped duplicate list to the per-partition scalar rollup.
-
-    ``dup_rows`` is (partition_id, <key>, cnt) with cnt > 1 only — bounded
-    by #violations, never the corpus. Bound the per-partition array: rank
-    duplicates (worst first) and keep the top ``max_dup_emit``;
-    determinism via the (cnt desc, key) order.
-    """
+    # the capped duplicate list, worst first; (cnt desc, key) keeps it
+    # deterministic
     w_rank = Window.partitionBy("partition_id") \
                    .orderBy(F.col("cnt").desc(), F.col(key))
-    dup_rows = dup_rows.withColumn("_rn", F.row_number().over(w_rank)) \
-                       .filter(F.col("_rn") <= max_dup_emit).drop("_rn")
+    dup_rows = counts.filter(F.col("cnt") > 1) \
+                     .withColumn("_rn", F.row_number().over(w_rank)) \
+                     .filter(F.col("_rn") <= max_dup_emit).drop("_rn")
     dup_lists = dup_rows.groupBy(
         F.col("partition_id").alias("_dp")).agg(
         F.collect_list(F.struct(F.col(key).alias("k"),
@@ -295,36 +307,23 @@ def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     per_part = sized_to_input(_unique_per_part(df, key, pcol, max_dup_emit),
                               df).persist()
 
-    dups = per_part.select(
-        "partition_id", F.explode("_dups").alias("d")
-    ).select("partition_id", F.col("d.k").alias(key), F.col("d.c").alias("cnt"))
-    verdicts = per_part.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (F.col("n_dup_keys") == 0).alias("passed"),
-        F.col("n_dup_keys").cast("double").alias("observed"),
-        F.lit(0.0).alias("expected"),
-        F.lit(0.0).alias("threshold"),
-        F.col("n_dup_keys").alias("n_violations"),
-        F.col("rows_scanned"),
-    )
-    viol = dups.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        F.col(key).alias("doc_id"),
-        F.col("cnt").cast("string").alias("observed"),
-        F.lit("1").alias("expected"),
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol),
-                       cached=(per_part,))
+    verdicts = verdict_select(
+        per_part, check.check_id, passed="(n_dup_keys = 0)",
+        observed="n_dup_keys", expected=_d(0.0), threshold=_d(0.0),
+        n_violations="n_dup_keys", rows_scanned="rows_scanned")
+    viol = violation_select(
+        per_part.selectExpr("partition_id", "EXPLODE(_dups) AS d"),
+        _sq(check.check_id), doc_id="d.k", observed="d.c",
+        expected=_sq("1"))
+    return CheckResult(verdicts, viol, cached=(per_part,))
 
 
 def _token_digest_join(df: DataFrame, expected_df: DataFrame,
                        pcol: str) -> tuple[DataFrame, Column]:
     """The token-invariant's shared lazy digest frame: one scan per side,
-    digests-only shuffles, one row per (partition, doc_id) with both sides'
-    (hash, length) digests. Returns ``(joined, mismatch)`` where ``mismatch``
-    is the violation predicate over the frame.
+    digests-only shuffles, one row per (partition_id, doc_id) with both
+    sides' (hash, length) digests. Returns ``(joined, mismatch)`` where
+    ``mismatch`` is the violation predicate over the frame.
 
     A digest mismatch PROVES the arrays differ (unequal hashes / lengths ⇒
     unequal bytes) — no exact-confirm rescan is needed; xxhash64 collisions
@@ -347,7 +346,7 @@ def _token_digest_join(df: DataFrame, expected_df: DataFrame,
     # full scan. min AND max digests: every copy of the doc matches the
     # snapshot ⟺ min = max = expected, so a corrupted DUPLICATE row can
     # never hide behind a clean copy.
-    obs = df.groupBy(pcol, "doc_id").agg(
+    obs = df.groupBy(F.col(pcol).alias("partition_id"), "doc_id").agg(
         F.min(F.xxhash64("tokens")).alias("_obs_hash_min"),
         F.max(F.xxhash64("tokens")).alias("_obs_hash"),
         F.min(F.size("tokens")).alias("_obs_len_min"),
@@ -372,7 +371,7 @@ def _token_digest_rollup(df: DataFrame, expected_df: DataFrame,
     eagerly, which hides its Exchanges from the consumer frames' plans).
     """
     joined, mismatch = _token_digest_join(df, expected_df, pcol)
-    return joined.groupBy(F.col(pcol).alias("partition_id")).agg(
+    return joined.groupBy("partition_id").agg(
         F.count(F.lit(1)).alias("rows_scanned"),
         F.sum(F.when(mismatch, 1).otherwise(0)).alias("n_bad"),
     )
@@ -405,24 +404,18 @@ def _check_token_invariant(df: DataFrame, check: Check, pcol: str) -> CheckResul
     # gate can inspect the LAZY rollup plan — the checkpoint here executes
     # it before any consumer plan is built.)
     per_part = _token_digest_rollup(df, expected_df, pcol).localCheckpoint()
-    verdicts = per_part.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (F.col("n_bad") == 0).alias("passed"),
-        F.col("n_bad").cast("double").alias("observed"),
-        F.lit(0.0).alias("expected"),
-        F.lit(0.0).alias("threshold"),
-        F.col("n_bad").alias("n_violations"),
-        F.col("rows_scanned"),
-    )
+    verdicts = verdict_select(
+        per_part, check.check_id, passed="(n_bad = 0)", observed="n_bad",
+        expected=_d(0.0), threshold=_d(0.0), n_violations="n_bad",
+        rows_scanned="rows_scanned")
 
     bad_pids = [r["partition_id"] for r in
                 per_part.filter(F.col("n_bad") > 0)
                         .select("partition_id").collect()]
     if not bad_pids:
         # clean corpus: zero extra scans, provably no violations
-        viol = _empty(df.sparkSession, VIOLATION_SCHEMA)
-        return CheckResult(_finish_verdicts(verdicts), viol)
+        return CheckResult(verdicts,
+                           _empty(df.sparkSession, VIOLATION_SCHEMA))
 
     # dirty path: re-derive the digest join, but push the (tiny, known from
     # the checkpointed rollup) failing-partition set into the observed-side
@@ -435,15 +428,11 @@ def _check_token_invariant(df: DataFrame, check: Check, pcol: str) -> CheckResul
         is_bad = is_bad | F.col(pcol).isNull()
     joined, mismatch = _token_digest_join(df.filter(is_bad), expected_df,
                                           pcol)
-    viol = joined.filter(mismatch).select(
-        F.col(pcol).alias("partition_id"),
-        F.lit(check.check_id).alias("check_id"),
-        F.col("doc_id"),
-        F.col("_obs_hash").cast("string").alias("observed"),
-        F.coalesce(F.col("_exp_hash").cast("string"), F.lit("<absent>"))
-         .alias("expected"),
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
+    viol = violation_select(
+        joined.filter(mismatch), _sq(check.check_id), doc_id="doc_id",
+        observed="_obs_hash",
+        expected=f"COALESCE(CAST(_exp_hash AS STRING), {_sq('<absent>')})")
+    return CheckResult(verdicts, viol)
 
 
 def _check_drift_ks(df: DataFrame, check: Check, pcol: str) -> CheckResult:
@@ -453,19 +442,12 @@ def _check_drift_ks(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     base_counts = check.params.get("baseline_counts")
     if base_counts is None and check.params.get("baseline") is not None:
         base_counts = ks_value_counts(check.params["baseline"], value_col)
-    scored = ks_by_partition(df, pcol, value_col, base_counts)
-    verdicts = scored.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (F.col("ks_d") <= threshold).alias("passed"),
-        F.col("ks_d").alias("observed"),
-        F.lit(threshold).alias("expected"),
-        F.lit(threshold).alias("threshold"),
-        F.lit(0).alias("n_violations"),
-        F.col("rows_scanned"),
-    )
-    return CheckResult(_finish_verdicts(verdicts),
-                       _empty(df.sparkSession, VIOLATION_SCHEMA))
+    verdicts = verdict_select(
+        ks_by_partition(df, pcol, value_col, base_counts), check.check_id,
+        passed=f"(ks_d <= {_d(threshold)})", observed="ks_d",
+        expected=_d(threshold), threshold=_d(threshold), n_violations="0",
+        rows_scanned="rows_scanned")
+    return CheckResult(verdicts, _empty(df.sparkSession, VIOLATION_SCHEMA))
 
 
 # kinds with their own plans; the aggregate kinds are built by checks/fused.py
@@ -497,48 +479,28 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
     designed around cheap pruned re-scans instead.
     """
     from pyanomalydetector_spark.checks.fused import (
-        plain_config, run_fused, split_fusible,
+        FUSIBLE_KINDS, plain_config, run_fused,
     )
 
-    spark = df.sparkSession
     checks = [c for c in map(plain_config, checks) if c is not None]
-    fused, rest = split_fusible(checks)
-
-    for check in rest:
-        if _DISPATCH.get(check.kind) is None:
+    for check in checks:
+        if check.kind not in FUSIBLE_KINDS and check.kind not in _DISPATCH:
             raise ValueError(f"unknown check kind {check.kind!r}")
 
-    # The fused pass and the eager per-check plans (unique's checkpoint)
-    # each materialize via their own Spark jobs; submitting them from
-    # concurrent threads lets the scheduler overlap their stages instead of
-    # idling cores between sequential jobs (Spark actions are thread-safe).
-    from concurrent.futures import ThreadPoolExecutor
+    # built one kind after another: no builder but token_invariant's (an
+    # eager rollup checkpoint) runs a Spark job, and the suite's jobs
+    # overlap in CheckResult.materialize
+    fused = [c for c in checks if c.kind in FUSIBLE_KINDS]
+    results = [run_fused(df, fused, partition_col)] if fused else []
+    results += [_DISPATCH[c.kind](df, c, partition_col)
+                for c in checks if c.kind not in FUSIBLE_KINDS]
 
-    def run_rest(check):
-        return _DISPATCH[check.kind](df, check, partition_col)
-
-    if fused and rest:
-        with ThreadPoolExecutor(max_workers=1 + len(rest)) as ex:
-            fut_fused = ex.submit(run_fused, df, fused, partition_col)
-            fut_rest = [ex.submit(run_rest, c) for c in rest]
-            verdict_frames, violation_frames, cached = fut_fused.result()
-            rest_results = [f.result() for f in fut_rest]
-    else:
-        verdict_frames, violation_frames, cached = \
-            run_fused(df, fused, partition_col) if fused else ([], [], [])
-        rest_results = [run_rest(c) for c in rest]
-
-    for res in rest_results:
-        verdict_frames.append(res.verdicts)
-        violation_frames.append(res.violations)
-        cached += list(res.cached)
-
-    verdicts = _empty(spark, VERDICT_SCHEMA)
-    for v in verdict_frames:
-        verdicts = verdicts.unionByName(v)
-    violations = _empty(spark, VIOLATION_SCHEMA)
-    for v in violation_frames:
-        violations = violations.unionByName(v)
+    spark = df.sparkSession
+    verdicts = reduce(DataFrame.unionByName, (r.verdicts for r in results),
+                      _empty(spark, VERDICT_SCHEMA))
+    violations = reduce(DataFrame.unionByName,
+                        (r.violations for r in results),
+                        _empty(spark, VIOLATION_SCHEMA))
     # verdicts hold at most partitions × checks rows: sized to the input, so
     # a small run's writer lands one file. The coalesce also folds the
     # stages after the last shuffle of every verdict plan (KS's
@@ -547,7 +509,7 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
     # splits of input up. Violations can be as large as the input and stay
     # parallel; the stream writer rebalances them instead.
     return CheckResult(sized_to_input(verdicts, df), violations,
-                       cached=tuple(cached))
+                       cached=tuple(f for r in results for f in r.cached))
 
 
 def default_suite(allowed_sources: Iterable[str]) -> list[Check]:

@@ -32,12 +32,12 @@ driver are folded in as broadcast 1-row frames:
 - z-score failing partitions: a broadcast left-join onto the violations
   scan instead of a collected id list.
 
-So a full suite materializes in ~3 Spark jobs (fused verdicts, fused
-violations, plus whatever non-fused checks need) instead of ~7 — the fixed
-job-latency term that dominates small inputs, and fewer barriers at scale.
-The per-partition aggregate cache is populated lazily by whichever of the
-two concurrent jobs gets there first (see the measured rationale at the
-persist site).
+So the fused kinds' job count does not grow with the number of fused
+checks. It is not small either: under AQE every shuffle or broadcast stage
+runs as its own job, and a warm 5k-row micro-batch of the default suite
+(``StreamingSuiteRunner.apply_batch``, writes included) runs 21 jobs.
+:meth:`CheckResult.materialize` fills the per-partition aggregate cache
+before the verdict and violation passes read it.
 
 Expressions are built as SQL STRINGS and handed to Spark via ``selectExpr``/
 ``F.expr`` — one py4j round trip per SELECT instead of one per sub-expression.
@@ -68,20 +68,20 @@ from __future__ import annotations
 
 import hashlib
 import re
-from typing import Iterable, Sequence
+from functools import reduce
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyanomalydetector_spark.checks.core import sized_to_input
+from pyanomalydetector_spark.checks.core import (
+    VIOLATION_SCHEMA, CheckResult, _d, _empty, _sq, sized_to_input,
+    verdict_select, violation_select,
+)
 from pyanomalydetector_spark.checks.drift import PSI_SMOOTH, psi_histogram
 
 FUSIBLE_KINDS = frozenset({"column_stats", "zscore_threshold", "referential",
                            "n_tok_consistency", "token_range", "drift_psi"})
-
-
-def is_fusible(check) -> bool:
-    return check.kind in FUSIBLE_KINDS
 
 
 # the DataFrame-valued param of each fused kind that accepts one
@@ -129,18 +129,6 @@ def plain_config(check):
 
 
 # ------------------------------------------------- SQL-string construction ----
-
-def _sq(s: str) -> str:
-    """SQL single-quoted string literal."""
-    return "'" + str(s).replace("'", "''") + "'"
-
-
-def _d(x: float) -> str:
-    """Exact DOUBLE literal: repr() is shortest-round-trip, so the parsed
-    double is bit-identical to the Python float F.lit() would have sent
-    (bare decimal literals parse as DECIMAL in Spark SQL — never use them)."""
-    return f"CAST('{repr(float(x))}' AS DOUBLE)"
-
 
 def _bt(name: str) -> str:
     """Backtick-quoted identifier for user-supplied column names. Spark's
@@ -280,11 +268,10 @@ def _global_mean_std(mtag: str) -> tuple[str, str]:
     return mean_t, std_t
 
 
-def run_fused(df: DataFrame, checks: Sequence, pcol: str):
-    """Build the fused two-pass plan. Returns (verdicts, violations, cached):
-    lists of *lazy* DataFrames in the order of ``checks`` plus the persisted
-    intermediates (for the caller to unpersist once materialized) — no job
-    runs here."""
+def run_fused(df: DataFrame, checks: Sequence, pcol: str) -> CheckResult:
+    """Build the fused two-pass plan: *lazy* verdicts (in the order of
+    ``checks``) and violations, with the persisted per-partition aggregate
+    in ``cached`` — no job runs here."""
     # ---- per-suite injective tags for every value_col (see _tag_map) ----
     ctag = _tag_map(
         c.params.get("value_col", "n_tok") for c in checks
@@ -395,25 +382,10 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             part_aggs.agg(*[F.expr(a) for a in gl_exprs])))
 
     # ---- verdict plans from the aggregate frame ----------------------------
-    # Each verdict frame is ONE filter + ONE selectExpr; columns carry the
-    # uniform VERDICT_SCHEMA types directly (no _finish_verdicts re-cast).
+    # Each verdict frame is ONE filter + ONE verdict_select.
     verdicts: list[DataFrame] = []
     viol_entries = []   # (check_id, cond_sql, observed_sql, expected_sql)
     viol_joins = []     # broadcast frames joined onto the violations scan
-
-    def verdict_select(frame, check_id: str, passed: str, observed: str,
-                       expected: str, threshold: str, n_violations: str,
-                       rows_scanned: str) -> DataFrame:
-        return frame.selectExpr(
-            "CAST(partition_id AS STRING) AS partition_id",
-            f"{_sq(check_id)} AS check_id",
-            f"CAST({passed} AS BOOLEAN) AS passed",
-            f"CAST({observed} AS DOUBLE) AS observed",
-            f"CAST({expected} AS DOUBLE) AS expected",
-            f"CAST({threshold} AS DOUBLE) AS threshold",
-            f"CAST({n_violations} AS BIGINT) AS n_violations",
-            f"CAST({rows_scanned} AS BIGINT) AS rows_scanned",
-        )
 
     for i, c in enumerate(checks):
         tag, p = f"c{i}", c.params
@@ -528,11 +500,11 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
                 observed=f"({psi})", expected=_d(threshold),
                 threshold=_d(threshold),
                 n_violations="0", rows_scanned="_rows"))
-        else:  # pragma: no cover — guarded by split_fusible
+        else:  # pragma: no cover — run_checks passes FUSIBLE_KINDS only
             raise ValueError(f"not fusible: {c.kind}")
 
     # ---- pass 2 plan: one scan emitting every row-level violation ----------
-    violations: list[DataFrame] = []
+    violations = _empty(df.sparkSession, VIOLATION_SCHEMA)
     if viol_entries:
         viol_src = df
         for frame, keycol in viol_joins:
@@ -546,24 +518,12 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             f"'check_id', {_sq(cid)}, 'observed', {obs}, 'expected', {exp}) "
             f"END"
             for cid, cond, obs, exp in viol_entries)
-        violations.append(
+        violations = violation_select(
             viol_src.selectExpr(
-                f"CAST({_bt(pcol)} AS STRING) AS partition_id",
-                "CAST(doc_id AS STRING) AS doc_id",
-                f"EXPLODE(FILTER(ARRAY({structs}), x -> x IS NOT NULL)) AS v",
-            ).selectExpr(
-                "partition_id",
-                "v.check_id AS check_id",
-                "doc_id",
-                "CAST(v.observed AS STRING) AS observed",
-                "CAST(v.expected AS STRING) AS expected",
-            ))
+                f"{_bt(pcol)} AS partition_id", "doc_id",
+                f"EXPLODE(FILTER(ARRAY({structs}), x -> x IS NOT NULL)) AS v"),
+            "v.check_id", doc_id="doc_id", observed="v.observed",
+            expected="v.expected")
 
-    return verdicts, violations, [part_aggs]
-
-
-def split_fusible(checks: Iterable) -> tuple[list, list]:
-    fused, rest = [], []
-    for c in checks:
-        (fused if is_fusible(c) else rest).append(c)
-    return fused, rest
+    return CheckResult(reduce(DataFrame.unionByName, verdicts), violations,
+                       cached=(part_aggs,))

@@ -262,12 +262,10 @@ def detect_cascade(history_df: DataFrame, trends_df: DataFrame,
         thr = feats.select("itemid", *thr_cols)
         return df.join(F.broadcast(thr), "itemid", "left")
 
-    if same or not (1 in stages):
+    if same or 1 not in stages or not need_recent:
         src = recent_df if need_recent else history_df
         spine = with_thresholds(src).groupBy("itemid") \
             .agg(*hist_aggs(with_d1=(1 in stages)))
-    elif not need_recent:
-        spine = history_df.groupBy("itemid").agg(*hist_aggs(with_d1=True))
     else:
         d1 = history_df.groupBy("itemid").agg(
             *hist_aggs(with_d1=True, with_rest=False))

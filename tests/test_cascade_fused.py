@@ -161,19 +161,25 @@ def test_strict_modes_eq_staged(spark, sf01_dir, case):
     assert strict and strict != portable
 
 
-def test_recent_slice_distinct_from_history(spark, sf01_dir):
+@pytest.mark.parametrize("stages", [ALL_STAGES, (1,)],
+                         ids=["all-stages", "detect1-only"])
+def test_recent_slice_distinct_from_history(spark, sf01_dir, stages):
     """recent_df is not history_df: detect1 reads the history window, the
     later stages a shorter recent slice — the one plan joins the two
-    per-item aggregates, and must still equal the per-stage reference."""
+    per-item aggregates, and must still equal the per-stage reference.
+    With detect1 alone nothing reads the recent slice: one history
+    aggregate, the same survivors as with recent = history."""
     cfg = CFG_LOOSE
     (history, trends, hc, hc2, sp2), kw = _windows(spark, sf01_dir, cfg,
-                                                   ALL_STAGES)
+                                                   stages)
     recent = history.filter(F.col("clock") >= sp2 - 12 * 3600)
     ref = _reference(history, trends, recent, cfg, hc, hc2, sp2, **kw)
     got = _ids(detect_cascade(history, trends, recent, cfg, hc, hc2, sp2,
                               **kw))
     assert got == ref
-    assert ref and ref != _staged(spark, sf01_dir, cfg)
+    reads_recent = stages != (1,)
+    assert ref and (ref != _staged(spark, sf01_dir, cfg, stages)) \
+        == reads_recent
 
 
 def test_pipeline_shared_scan_path_eq_staged(spark, sf01_dir):

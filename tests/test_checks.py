@@ -11,9 +11,11 @@ from pyspark.sql import functions as F
 
 from pyanomalydetector_spark.sources.sequences import (
     synthesize_sequences, load_sequences,
-    DUP_MOD, BAD_SOURCE_MOD, BAD_NTOK_MOD, BAD_SOURCE,
+    DUP_MOD, BAD_SOURCE_MOD, BAD_NTOK_MOD, BAD_SOURCE, SEQ_SCHEMA,
 )
-from pyanomalydetector_spark.checks.core import Check, run_checks, default_suite
+from pyanomalydetector_spark.checks.core import (
+    VERDICT_SCHEMA, VIOLATION_SCHEMA, Check, run_checks, default_suite,
+)
 
 from check_oracle import assert_matches_oracle
 
@@ -107,16 +109,32 @@ def test_default_suite_runs_end_to_end(spark, seq):
     assert res.violations.count() > 0
 
 
-def test_suite_on_empty_input(spark):
-    """Robustness: the whole suite on a 0-row table must produce empty,
-    well-typed verdict/violation frames — not crash (a real failure mode
-    when a partition filter matches nothing on resume)."""
-    empty = spark.createDataFrame(
-        [], "doc_id string, tokens array<int>, n_tok int, source string")
-    res = run_checks(empty, default_suite(["src0"]))
-    assert res.verdicts.count() == 0
-    assert res.violations.count() == 0
-    assert "partition_id" in res.verdicts.columns
+def test_suite_on_empty_input(spark, seq):
+    """Robustness: all nine check kinds on a 0-row table must produce empty
+    verdict/violation frames — not crash (a real failure mode when a
+    partition filter matches nothing on resume). On the empty table and on
+    the fixture both frames carry VERDICT_SCHEMA / VIOLATION_SCHEMA exactly
+    (names, types, order): every kind goes through the one projection."""
+    empty = spark.createDataFrame([], SEQ_SCHEMA)
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for df in (empty, seq):
+        suite = default_suite(["src0"]) + [
+            Check("token_range_tokens", "token_range", {"max_value": 50_000}),
+            Check("token_invariant_tokens", "token_invariant",
+                  {"expected": df})]
+        assert len({c.kind for c in suite}) == 9
+        res = run_checks(df, suite)
+        assert fields(res.verdicts.schema) == fields(VERDICT_SCHEMA)
+        assert fields(res.violations.schema) == fields(VIOLATION_SCHEMA)
+        verdicts = res.verdicts.collect()
+        if df is empty:
+            assert verdicts == [] and res.violations.count() == 0
+        else:
+            assert {r["check_id"] for r in verdicts} == \
+                {c.check_id for c in suite}
 
 
 def test_jsonl_source_equals_parquet_source(spark, sf_dir):

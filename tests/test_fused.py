@@ -54,10 +54,10 @@ def test_fused_eq_per_check_all_null_value_partition(spark, tmp_path):
 
 
 def test_fused_sql_strings_survive_quoted_identifiers(spark, seq, tmp_path):
-    """The fused builder emits SQL STRINGS, so quote-bearing check ids and
-    allowed-set members are an injection surface: a check_id like
-    "o'brien", an allowed value with a quote, and a float literal that must
-    round-trip exactly."""
+    """Every builder projects its rows through SQL STRINGS, so quote-bearing
+    check ids and allowed-set members are an injection surface: a check_id
+    like "o'brien", an allowed value with a quote, and a float literal that
+    must round-trip exactly — for the fused kinds and for unique and KS."""
     allowed = _allowed(seq) + ["it's-a-source", "x''y"]
     suite = [
         Check("o'brien \"stats\"", "column_stats",
@@ -69,6 +69,9 @@ def test_fused_sql_strings_survive_quoted_identifiers(spark, seq, tmp_path):
         Check("psi ± π", "drift_psi",
               {"value_col": "n_tok", "buckets": 7, "threshold": 0.25}),
         Check("n't", "n_tok_consistency", {}),
+        Check("uniq'ue -- ü", "unique", {"key": "doc_id"}),
+        Check("ks'--é\"", "drift_ks",
+              {"value_col": "n_tok", "threshold": 0.1 + 0.2}),
     ]
     assert_matches_oracle(spark, seq, suite, tmp_path, "quoted")
 
