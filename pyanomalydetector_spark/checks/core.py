@@ -64,9 +64,7 @@ from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
-from pyanomalydetector_spark.checks.drift import (
-    ks_by_partition, ks_value_counts,
-)
+from pyanomalydetector_spark.checks.drift import ks_by_partition
 
 VERDICT_SCHEMA = StructType([
     StructField("partition_id", StringType()),
@@ -438,12 +436,10 @@ def _check_token_invariant(df: DataFrame, check: Check, pcol: str) -> CheckResul
 def _check_drift_ks(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     value_col = check.params.get("value_col", "n_tok")
     threshold = float(check.params.get("threshold", 0.2))
-    # pinned counts win; an explicit baseline frame is reduced lazily
-    base_counts = check.params.get("baseline_counts")
-    if base_counts is None and check.params.get("baseline") is not None:
-        base_counts = ks_value_counts(check.params["baseline"], value_col)
+    # pinned or explicit-frame counts (plain_config); None: the input itself
     verdicts = verdict_select(
-        ks_by_partition(df, pcol, value_col, base_counts), check.check_id,
+        ks_by_partition(df, pcol, value_col,
+                        check.params.get("baseline_counts")), check.check_id,
         passed=f"(ks_d <= {_d(threshold)})", observed="ks_d",
         expected=_d(threshold), threshold=_d(threshold), n_violations="0",
         rows_scanned="rows_scanned")
@@ -469,8 +465,9 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
     row-level violation — at 100 TB this is the difference between 2 and 7+
     full table scans. Checks whose semantics need their own shuffle
     (``unique``, ``drift_ks``, ``token_invariant``) keep their own plans.
-    DataFrame-valued params of fused kinds are first collected into plain
-    config (:func:`~pyanomalydetector_spark.checks.fused.plain_config`).
+    DataFrame-valued params are first turned into plain config
+    (:func:`~pyanomalydetector_spark.checks.fused.plain_config`). Check ids
+    must be unique: an id also keys the check's pinned baseline.
 
     The input is deliberately NOT cached: each pass re-scans the columnar
     source with column pruning (a pass that only needs ``n_tok`` reads only
@@ -482,10 +479,15 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
         FUSIBLE_KINDS, plain_config, run_fused,
     )
 
-    checks = [c for c in map(plain_config, checks) if c is not None]
+    checks = list(checks)
+    seen: set[str] = set()
     for check in checks:
         if check.kind not in FUSIBLE_KINDS and check.kind not in _DISPATCH:
             raise ValueError(f"unknown check kind {check.kind!r}")
+        if check.check_id in seen:
+            raise ValueError(f"duplicate check_id {check.check_id!r}")
+        seen.add(check.check_id)
+    checks = [c for c in map(plain_config, checks) if c is not None]
 
     # built one kind after another: no builder but token_invariant's (an
     # eager rollup checkpoint) runs a Spark job, and the suite's jobs
@@ -494,13 +496,13 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
     results = [run_fused(df, fused, partition_col)] if fused else []
     results += [_DISPATCH[c.kind](df, c, partition_col)
                 for c in checks if c.kind not in FUSIBLE_KINDS]
+    if not results:
+        return CheckResult(_empty(df.sparkSession, VERDICT_SCHEMA),
+                           _empty(df.sparkSession, VIOLATION_SCHEMA))
 
-    spark = df.sparkSession
-    verdicts = reduce(DataFrame.unionByName, (r.verdicts for r in results),
-                      _empty(spark, VERDICT_SCHEMA))
+    verdicts = reduce(DataFrame.unionByName, (r.verdicts for r in results))
     violations = reduce(DataFrame.unionByName,
-                        (r.violations for r in results),
-                        _empty(spark, VIOLATION_SCHEMA))
+                        (r.violations for r in results))
     # verdicts hold at most partitions × checks rows: sized to the input, so
     # a small run's writer lands one file. The coalesce also folds the
     # stages after the last shuffle of every verdict plan (KS's

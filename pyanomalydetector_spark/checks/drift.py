@@ -1,5 +1,5 @@
-"""Distribution-drift scoring: two-sample KS per partition, plus the PSI
-baseline-histogram capture.
+"""Distribution-drift scoring: two-sample KS per partition, plus the one
+baseline capture of every kind that scores against a pinned baseline.
 
 Recasts the reference's detect2/detect3 "recent distribution vs historical
 distribution" semantics (/root/reference/data_processing/detector.py:286-337,
@@ -13,13 +13,17 @@ frame — an explicit baseline reduced by :func:`ks_value_counts`, or counts
 pinned by the checkpoint store. DataFrame aggregations + window cumulative
 sums — no UDFs, no collect, no persist. PSI itself is scored inside the fused
 suite pass (checks/fused.py); this module keeps its smoothing constant and
-:func:`psi_histogram`, which pins a baseline histogram for that pass.
+:func:`baseline_params`, every kind's one baseline capture from a frame.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pyanomalydetector_spark.functions.stats import (
+    finalize_mean_std, sufficient_stats,
+)
 
 PSI_SMOOTH = 0.5  # Laplace smoothing added to every bucket count
 
@@ -59,6 +63,34 @@ def ks_value_counts(df: DataFrame, value_col: str) -> DataFrame:
     Lazy; the NULL-value group is kept (it carries no KS mass)."""
     return df.groupBy(F.col(value_col).cast("double").alias("v")) \
              .agg(F.count(F.lit(1)).alias("c_b"))
+
+
+def baseline_params(check, df: DataFrame) -> dict:
+    """``check``'s plain pinned params captured from ``df``: its explicit
+    ``baseline`` frame (checks/fused.py ``plain_config``) or the input the
+    checkpoint store pins. zscore → ``baseline_scalars`` (the frame's
+    moments; an explicit zscore frame is one (mean, std) row, which
+    ``plain_config`` reads), PSI → ``pinned_hist`` with THIS check's
+    buckets, KS → lazy ``baseline_counts``; ``{}`` for other kinds. An input
+    with no non-NULL value (empty, or an all-NULL column) pins no zscore or
+    PSI baseline; an explicit PSI frame is pinned whatever it holds."""
+    p = check.params
+    vc = p.get("value_col", "n_tok")
+    if check.kind == "zscore_threshold":
+        rows = finalize_mean_std(sufficient_stats(
+            df.select(F.lit("all").alias("_g"), vc), ["_g"], vc)) \
+            .select("mean", "std").collect()
+        return {"baseline_scalars": {"mean": float(rows[0]["mean"]),
+                                     "std": float(rows[0]["std"])}} \
+            if rows else {}
+    if check.kind == "drift_psi":
+        hist = psi_histogram(df, vc, int(p.get("buckets", 10)))
+        own = p.get("baseline") is not None
+        return {"pinned_hist": hist} if own or hist["lo"] is not None \
+            else {}
+    if check.kind == "drift_ks":
+        return {"baseline_counts": ks_value_counts(df, vc)}
+    return {}
 
 
 def ks_by_partition(df: DataFrame, partition_col: str, value_col: str,

@@ -54,8 +54,8 @@ their own plans — those shuffles are inherent to their semantics.
 
 DataFrame-valued params (a z-score or PSI ``baseline`` frame, a referential
 ``allowed`` frame) never reach the builder: :func:`plain_config` collects
-them into the plain config first. The reference for every kind is an
-independent DuckDB derivation (tests/check_oracle.py and
+them into the plain config first (a KS ``baseline`` frame too). The
+reference for every kind is an independent DuckDB derivation (tests/check_oracle.py and
 ``__spark_entry__.oracle_sql()``); integer aggregates match exactly, float
 aggregates within the 6-decimal rounding every consumer applies.
 
@@ -78,21 +78,23 @@ from pyanomalydetector_spark.checks.core import (
     VIOLATION_SCHEMA, CheckResult, _d, _empty, _sq, sized_to_input,
     verdict_select, violation_select,
 )
-from pyanomalydetector_spark.checks.drift import PSI_SMOOTH, psi_histogram
+from pyanomalydetector_spark.checks.drift import PSI_SMOOTH, baseline_params
 
 FUSIBLE_KINDS = frozenset({"column_stats", "zscore_threshold", "referential",
                            "n_tok_consistency", "token_range", "drift_psi"})
 
 
-# the DataFrame-valued param of each fused kind that accepts one
+# the DataFrame-valued param of each kind that accepts one
 _FRAME_PARAM = {"zscore_threshold": "baseline", "drift_psi": "baseline",
-                "referential": "allowed"}
+                "drift_ks": "baseline", "referential": "allowed"}
+_PINNED_PARAM = {"zscore_threshold": "baseline_scalars",
+                 "drift_psi": "pinned_hist", "drift_ks": "baseline_counts"}
 
 
 def plain_config(check):
-    """``check`` with its DataFrame-valued param collected into the plain
-    config :func:`run_fused` reads, or ``None`` when the check has nothing
-    to score. Checks without such a param pass through untouched (no job).
+    """``check`` with its DataFrame-valued param turned into the plain
+    config its builder reads, or ``None`` when the check has nothing to
+    score. Checks without such a param pass through untouched (no job).
 
     - zscore ``baseline`` frame (one ``(mean, std)`` row) → ``baseline_
       scalars``. A 0-row frame scores nothing (the partition × baseline
@@ -100,9 +102,9 @@ def plain_config(check):
     - referential ``allowed`` frame → its sorted non-NULL members. A NULL
       member matches no row (``NULL = NULL`` is not true), so dropping it
       keeps the anti-join semantics: a NULL value still violates.
-    - psi ``baseline`` frame → ``pinned_hist`` (:func:`psi_histogram`).
+    - psi / KS ``baseline`` frame → ``drift.baseline_params``.
 
-    An explicit ``baseline_scalars`` / ``pinned_hist`` wins over a frame.
+    An explicit pinned param (``_PINNED_PARAM``) wins over a frame.
     """
     key = _FRAME_PARAM.get(check.kind)
     frame = check.params.get(key)
@@ -113,7 +115,9 @@ def plain_config(check):
         col = p.get("column", "source")
         members = {r[0] for r in frame.select(col).distinct().collect()}
         p["allowed"] = sorted(members - {None})
-    elif check.kind == "zscore_threshold" and "baseline_scalars" not in p:
+    elif _PINNED_PARAM[check.kind] in p:
+        pass    # the explicit pinned param wins; the frame is dropped
+    elif check.kind == "zscore_threshold":
         rows = frame.select("mean", "std").limit(2).collect()
         if not rows:
             return None
@@ -122,9 +126,8 @@ def plain_config(check):
                              f"be one (mean, std) row without NULLs")
         p["baseline_scalars"] = {"mean": float(rows[0]["mean"]),
                                  "std": float(rows[0]["std"])}
-    elif check.kind == "drift_psi" and "pinned_hist" not in p:
-        p["pinned_hist"] = psi_histogram(
-            frame, p.get("value_col", "n_tok"), int(p.get("buckets", 10)))
+    else:
+        p.update(baseline_params(check, frame))
     return type(check)(check.check_id, check.kind, p)
 
 
@@ -277,19 +280,11 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str) -> CheckResult:
         c.params.get("value_col", "n_tok") for c in checks
         if c.kind in ("column_stats", "zscore_threshold", "drift_psi"))
 
-    # ---- PSI bucket bounds: pinned → python lits; else a lazy 1-row agg ----
-    psi_checks = [c for c in checks if c.kind == "drift_psi"]
-    pinned_bounds: dict[str, tuple[float, float]] = {}
-    scan_vcs: list[str] = []
-    for c in psi_checks:
-        vc = c.params.get("value_col", "n_tok")
-        pinned = c.params.get("pinned_hist")
-        if pinned is not None:
-            # lo = hi = None (no non-NULL baseline value) takes the
-            # degenerate-range branch below: every row in bucket 0
-            pinned_bounds[vc] = (pinned["lo"], pinned["hi"])
-        elif vc not in scan_vcs:
-            scan_vcs.append(vc)
+    # ---- PSI bucket bounds: pinned → python lits (per check); else a lazy
+    # 1-row agg per value column ----
+    scan_vcs = list(dict.fromkeys(
+        c.params.get("value_col", "n_tok") for c in checks
+        if c.kind == "drift_psi" and c.params.get("pinned_hist") is None))
 
     part_src = df
     if scan_vcs:
@@ -324,8 +319,11 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str) -> CheckResult:
             vc = p.get("value_col", "n_tok")
             nb = int(p.get("buckets", 10))
             v = _dcast(vc)
-            if vc in pinned_bounds:
-                lo, hi = pinned_bounds[vc]
+            pinned = p.get("pinned_hist")
+            if pinned is not None:
+                # lo = hi = None (no non-NULL baseline value): every row in
+                # bucket 0
+                lo, hi = pinned["lo"], pinned["hi"]
                 if hi == lo:
                     bucket = "0"
                 else:

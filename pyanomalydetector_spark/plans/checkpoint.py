@@ -15,8 +15,10 @@ same guarantees for the check-suite engine:
 - **Pinned baselines**: global-baseline checks (z-score, PSI, KS) must
   compare against the baseline captured when the suite was first run,
   otherwise "incremental result ≡ from-scratch recompute" breaks. On first
-  run the store captures global moments / histogram / value-counts; resumed
-  runs re-pin the stored baseline into the suite.
+  run the store captures each check's own baseline, keyed by ``check_id``;
+  resumed runs re-pin it into the suite. A store written when pins were
+  keyed by column re-pins once (a stream store from its next non-empty
+  batch).
 - **Skip-done**: partitions already verdicted under the same
   ``(suite_hash, snapshot_id)`` are filtered out *before* the scan — an
   ``isin``/anti filter on the partition column that Catalyst pushes into
@@ -34,7 +36,6 @@ import os
 import re
 import shutil
 import time
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -42,12 +43,7 @@ from pyspark.sql import functions as F
 from pyanomalydetector_spark.checks.core import (
     Check, CheckResult, run_checks, VERDICT_SCHEMA, VIOLATION_SCHEMA,
 )
-from pyanomalydetector_spark.checks.drift import (
-    ks_value_counts, psi_histogram,
-)
-from pyanomalydetector_spark.functions.stats import (
-    sufficient_stats, finalize_mean_std,
-)
+from pyanomalydetector_spark.checks.drift import baseline_params
 
 CKPT_SCHEMA = ("partition_id string, suite_hash string, snapshot_id string, "
                "rows_scanned long, stat_digest long, n_failed long, "
@@ -126,14 +122,6 @@ def snapshot_id_for_dir(path: str) -> str:
             entries.append((os.path.relpath(os.path.join(root, f), path),
                             st.st_size, int(st.st_mtime)))
     return hashlib.sha256(json.dumps(entries).encode()).hexdigest()[:16]
-
-
-@dataclass
-class PinnedBaseline:
-    """Engine-portable scalars + bounded count tables captured at first run."""
-    moments: dict = field(default_factory=dict)   # value_col -> {mean, std}
-    psi: dict = field(default_factory=dict)       # value_col -> {lo, hi, counts, n_base}
-    ks_value_cols: list = field(default_factory=list)  # stored as parquet
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
@@ -238,22 +226,22 @@ class CheckpointStore:
         rows.write.mode("append").parquet(self.ckpt_dir)
 
     # ----------------------------------------------------------- baseline ---
-    def save_baseline(self, shash: str, snap: str, bl: PinnedBaseline,
-                      ks_counts: dict[str, DataFrame]) -> None:
-        """KS parquet FIRST, the json commit marker LAST and atomically
-        (tmp + os.replace): load_baseline treats the json as the commit
-        record, so writing it before the parquet would make a crash in
-        between unrecoverable — every later run would load the baseline,
-        then raise on the missing ks_counts path until someone hand-deleted
-        the json. A crash before the json simply recomputes; a torn json
-        can never be observed through the rename.
+    def save_baseline(self, shash: str, snap: str, bl: dict,
+                      tables: dict[str, DataFrame]) -> None:
+        """Store :func:`compute_baseline`'s pins. Count tables FIRST, the json commit marker LAST and atomically (tmp +
+        os.replace): load_baseline treats the json as the commit record, so
+        writing it before the parquet would make a crash in between
+        unrecoverable — every later run would load the baseline, then raise
+        on the missing table until someone hand-deleted the json. A crash
+        before the json simply recomputes; a torn json can never be
+        observed through the rename.
 
-        The count tables land in dirs VERSIONED by (suite_hash, snapshot):
-        an unversioned ``ks/<vc>`` would be clobbered by the overwrite-write
-        for a NEW (hash, snapshot) BEFORE the json swap, so a crash in that
-        window would leave the old json validly pointing at the new run's
-        (or a torn) parquet — silently wrong ks_d against a baseline that
-        passes load_baseline's identity check. With versioned dirs the old
+        The tables land in a dir VERSIONED by (suite_hash, snapshot): an
+        unversioned dir would be clobbered by the overwrite-write for a NEW
+        (hash, snapshot) BEFORE the json swap, so a crash in that window
+        would leave the old json validly pointing at the new run's (or a
+        torn) parquet — silently wrong ks_d against a baseline that passes
+        load_baseline's identity check. With versioned dirs the old
         pointer's data is never touched; superseded versions are pruned
         only AFTER the swap (keeping the previous version as the
         manual-recovery fallback, the streaming state store's discipline —
@@ -262,37 +250,38 @@ class CheckpointStore:
         if os.path.exists(self.baseline_json):
             try:
                 with open(self.baseline_json) as f:
-                    prev_keep = set(json.load(f).get("ks_dirs", {}).values())
+                    prev_keep = {d.split("/")[0] for d in
+                                 json.load(f).get("tables", {}).values()}
             except (OSError, ValueError):
                 pass
         ver = f"{shash}_{snap}"
-        ks_dirs = {}
-        for vc, df in ks_counts.items():
-            d = f"{vc}__{ver}"
-            df.write.mode("overwrite").parquet(os.path.join(self.ks_dir, d))
-            ks_dirs[vc] = d
+        dirs = {}
+        for i, (cid, frame) in enumerate(tables.items()):
+            # the check id may hold any character: name the dir by position
+            dirs[cid] = f"{ver}/{i}"
+            frame.write.mode("overwrite").parquet(
+                os.path.join(self.ks_dir, dirs[cid]))
         tmp = self.baseline_json + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"suite_hash": shash, "snapshot_id": snap,
-                       "moments": bl.moments, "psi": bl.psi,
-                       "ks_value_cols": bl.ks_value_cols,
-                       "ks_dirs": ks_dirs}, f)
+                       "pins": bl, "tables": dirs}, f)
         os.replace(tmp, self.baseline_json)
         if os.path.isdir(self.ks_dir):
-            keep = set(ks_dirs.values()) | prev_keep
             for d in os.listdir(self.ks_dir):
-                if d not in keep:
+                if d not in prev_keep | {ver}:
                     shutil.rmtree(os.path.join(self.ks_dir, d),
                                   ignore_errors=True)
 
-    def load_baseline(self, shash: str, snap: str) -> PinnedBaseline | None:
+    def load_baseline(self, shash: str, snap: str) -> dict | None:
+        # a json written when pins were keyed by column has no "pins"
         if not os.path.exists(self.baseline_json):
             return None
         with open(self.baseline_json) as f:
             d = json.load(f)
-        if d["suite_hash"] != shash or d["snapshot_id"] != snap:
+        if (d["suite_hash"] != shash or d["snapshot_id"] != snap
+                or "pins" not in d):
             return None
-        return PinnedBaseline(d["moments"], d["psi"], d["ks_value_cols"])
+        return d["pins"]
 
     def pinned_suite(self, df: DataFrame, checks: list[Check], shash: str,
                      snap: str) -> list[Check]:
@@ -301,15 +290,13 @@ class CheckpointStore:
         computed from ``df`` and saved first."""
         bl = self.load_baseline(shash, snap)
         if bl is None:
-            bl, ks_counts = compute_baseline(df, checks)
-            self.save_baseline(shash, snap, bl, ks_counts)
+            bl, tables = compute_baseline(df, checks)
+            self.save_baseline(shash, snap, bl, tables)
         return pin_suite(checks, bl, self)
 
-    def ks_counts(self, value_col: str) -> DataFrame:
-        d = value_col   # legacy layout: unversioned dir named by the column
-        if os.path.exists(self.baseline_json):
-            with open(self.baseline_json) as f:
-                d = json.load(f).get("ks_dirs", {}).get(value_col, d)
+    def ks_counts(self, check_id: str) -> DataFrame:
+        with open(self.baseline_json) as f:
+            d = json.load(f)["tables"][check_id]
         # the schema is drift.ks_value_counts'; giving it skips the
         # footer-inference job that every read of the counts would run
         # (once per stream batch)
@@ -339,67 +326,43 @@ class CheckpointStore:
 
 # ---------------------------------------------------------------- baseline ---
 
-def compute_baseline(df: DataFrame, checks: list[Check]) -> tuple[PinnedBaseline, dict]:
-    """Capture every global baseline the suite's checks need (one pass each,
-    all tiny outputs).
+def compute_baseline(df: DataFrame,
+                     checks: list[Check]) -> tuple[dict, dict]:
+    """Capture each check's baseline from ``df`` (drift.baseline_params):
+    ``(bl, tables)``, both keyed by ``check_id`` — plain pinned params, and
+    the count tables stored as parquet (``None`` in ``bl``).
 
     Checks carrying an explicit user ``baseline`` DataFrame are SKIPPED:
     the user's reference is already a run-stable external constant, and
     pinning an input-derived baseline over it would silently turn drift-
     vs-reference into self-comparison (PSI ≈ 0, drift never flagged) and
     z-scores against the wrong mean/std. Degenerate inputs (empty, or an
-    all-NULL value column) are also skipped rather than crashed on — the
-    unpinned check then degrades exactly like the plain ``run_checks``
-    path (no verdict rows), preserving one-shot ≡ resumed parity."""
-    bl = PinnedBaseline()
-    ks_counts: dict[str, DataFrame] = {}
+    all-NULL value column) pin no zscore or PSI baseline — the unpinned
+    check then degrades exactly like the plain ``run_checks`` path (no
+    verdict rows), preserving one-shot ≡ resumed parity."""
+    bl: dict[str, dict] = {}
+    tables: dict[str, DataFrame] = {}
     for c in checks:
-        vc = c.params.get("value_col", "n_tok")
         if c.params.get("baseline") is not None:
             continue
-        if c.kind == "zscore_threshold" and vc not in bl.moments:
-            rows = finalize_mean_std(sufficient_stats(
-                df.select(F.lit("all").alias("_g"), vc), ["_g"], vc)) \
-                .select("mean", "std").collect()
-            if not rows:   # empty input / all-NULL column: cnt==0 filtered
-                continue
-            row = rows[0]
-            bl.moments[vc] = {"mean": float(row["mean"]), "std": float(row["std"])}
-        elif c.kind == "drift_psi" and vc not in bl.psi:
-            hist = psi_histogram(df, vc, int(c.params.get("buckets", 10)))
-            if hist["lo"] is None:   # empty input / all-NULL column
-                continue
-            bl.psi[vc] = hist
-        elif c.kind == "drift_ks" and vc not in bl.ks_value_cols:
-            bl.ks_value_cols.append(vc)
-            ks_counts[vc] = ks_value_counts(df, vc)
-    return bl, ks_counts
+        for k, v in baseline_params(c, df).items():
+            if isinstance(v, DataFrame):   # parquet; None in the json
+                tables[c.check_id] = v
+                v = None
+            bl.setdefault(c.check_id, {})[k] = v
+    return bl, tables
 
 
-def pin_suite(checks: list[Check], bl: PinnedBaseline,
+def pin_suite(checks: list[Check], bl: dict,
               store: CheckpointStore) -> list[Check]:
-    """Rewrite baseline-dependent checks to use the pinned baseline. A
-    check with an explicit user ``baseline`` keeps it (see
-    :func:`compute_baseline`) — the guard is per CHECK, not per value_col,
-    so a user-baselined check and an input-baselined one may share a
-    value_col without the pin leaking onto the former."""
+    """Re-apply ``bl``'s pins by ``check_id``, reading count tables back
+    from ``store``."""
     pinned = []
     for c in checks:
-        vc = c.params.get("value_col", "n_tok")
-        if c.params.get("baseline") is not None:
-            pinned.append(c)
-        elif c.kind == "zscore_threshold" and vc in bl.moments:
-            pinned.append(Check(c.check_id, c.kind,
-                                {**c.params, "baseline_scalars": bl.moments[vc]}))
-        elif c.kind == "drift_psi" and vc in bl.psi:
-            pinned.append(Check(c.check_id, c.kind,
-                                {**c.params, "pinned_hist": bl.psi[vc]}))
-        elif c.kind == "drift_ks" and vc in bl.ks_value_cols:
-            pinned.append(Check(c.check_id, c.kind,
-                                {**c.params,
-                                 "baseline_counts": store.ks_counts(vc)}))
-        else:
-            pinned.append(c)
+        pins = {k: store.ks_counts(c.check_id) if v is None else v
+                for k, v in bl.get(c.check_id, {}).items()}
+        pinned.append(Check(c.check_id, c.kind, {**c.params, **pins})
+                      if pins else c)
     return pinned
 
 

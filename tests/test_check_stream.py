@@ -34,43 +34,67 @@ def _suite(seq):
     return default_suite(allowed)
 
 
+def _psi_pair(*buckets):
+    """``drift_psi`` checks on ``n_tok``, one per bucket count, in order."""
+    return [Check(f"psi_b{nb}", "drift_psi",
+                  {"value_col": "n_tok", "buckets": nb, "threshold": 0.25})
+            for nb in buckets]
+
+
 def test_stream_validates_each_batch(spark, seq, tmp_path):
-    inp = str(tmp_path / "in")
+    """Batch 2 is judged against the baseline pinned from batch 1: its
+    verdicts equal a one-shot run of the suite with batch 1 as every
+    drift check's explicit ``baseline`` frame. Also for two PSI checks on
+    one column, in either order — each keeps its own histogram (when pins
+    were keyed by column, [10, 20] failed the batch with IndexError and
+    [20, 10] scored psi_b10 against the 20-bucket histogram)."""
     parts = sorted(r["source"] for r in seq.select("source").distinct().collect())
     half1, half2 = parts[: len(parts) // 2], parts[len(parts) // 2:]
+    b1 = seq.filter(F.col("source").isin(half1))
 
-    seq.filter(F.col("source").isin(half1)).write.mode("append").parquet(inp)
-    suite = _suite(seq)
-    runner = StreamingSuiteRunner(spark, str(tmp_path / "store"), suite)
+    for name, suite in (("default", _suite(seq)),
+                        ("psi_10_20", _psi_pair(10, 20)),
+                        ("psi_20_10", _psi_pair(20, 10))):
+        base = tmp_path / name
+        inp = str(base / "in")
+        b1.write.mode("append").parquet(inp)
+        runner = StreamingSuiteRunner(spark, str(base / "store"), suite)
 
-    q = stream_check_suite(spark, inp, seq.schema, runner,
-                           str(tmp_path / "ck"))
-    _await_and_stop(q, 180)
-    v1 = runner.verdicts().collect()
-    assert {r["partition_id"] for r in v1} == set(half1)
-    batch_ids = {r["batch_id"] for r in v1}
+        q = stream_check_suite(spark, inp, seq.schema, runner,
+                               str(base / "ck"))
+        _await_and_stop(q, 180)
+        v1 = runner.verdicts().collect()
+        assert {r["partition_id"] for r in v1} == set(half1), name
+        batch_ids = {r["batch_id"] for r in v1}
 
-    # second wave of files → validated as a new batch against the SAME
-    # pinned baseline
-    seq.filter(F.col("source").isin(half2)).write.mode("append").parquet(inp)
-    q = stream_check_suite(spark, inp, seq.schema, runner,
-                           str(tmp_path / "ck"))
-    _await_and_stop(q, 180)
-    v2 = runner.verdicts().collect()
-    assert {r["partition_id"] for r in v2} == set(parts)
-    assert {r["batch_id"] for r in v2} - batch_ids  # new batch id appeared
+        # second wave of files → validated as a new batch against the SAME
+        # pinned baseline
+        seq.filter(F.col("source").isin(half2)) \
+           .write.mode("append").parquet(inp)
+        q = stream_check_suite(spark, inp, seq.schema, runner,
+                               str(base / "ck"))
+        _await_and_stop(q, 180)
+        v2 = runner.verdicts().collect()
+        assert {r["partition_id"] for r in v2} == set(parts), name
+        assert {r["batch_id"] for r in v2} - batch_ids, name  # new batch
 
-    # equivalence: batch-2 verdicts == one-shot run of the pinned suite on
-    # the same slice
-    bl = runner.store.load_baseline(suite_hash(suite), "stream")
-    pinned = pin_suite(suite, bl, runner.store)
-    expected = run_checks(seq.filter(F.col("source").isin(half2)), pinned)
+        # equivalence: batch-2 verdicts == one-shot run of the pinned suite
+        # on the same slice — the stored pins, and independently of the
+        # store, batch 1 as the drift checks' explicit baseline frame
+        bl = runner.store.load_baseline(suite_hash(suite), "stream")
+        pinned = pin_suite(suite, bl, runner.store)
+        framed = [Check(c.check_id, c.kind, {**c.params, "baseline": b1})
+                  if c.kind in ("drift_psi", "drift_ks") else p
+                  for c, p in zip(suite, pinned)]
 
-    def norm(rows):
-        return sorted((r["partition_id"], r["check_id"], r["passed"],
-                       round(r["observed"], 6)) for r in rows)
-    got2 = [r for r in v2 if r["partition_id"] in set(half2)]
-    assert norm(got2) == norm(expected.verdicts.collect())
+        def norm(rows):
+            return sorted((r["partition_id"], r["check_id"], r["passed"],
+                           round(r["observed"], 6)) for r in rows)
+        got2 = norm(r for r in v2 if r["partition_id"] in set(half2))
+        b2 = seq.filter(F.col("source").isin(half2))
+        for expected in (pinned, framed):
+            assert got2 == norm(run_checks(b2, expected).verdicts.collect()), \
+                name
 
 
 def test_stream_batch_redelivery_noop(spark, seq, tmp_path):

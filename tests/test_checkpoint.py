@@ -12,7 +12,7 @@ from pyanomalydetector_spark.sources.sequences import load_sequences
 from pyanomalydetector_spark.checks.core import Check, run_checks, default_suite
 from pyanomalydetector_spark.plans.checkpoint import (
     CheckpointStore, run_with_checkpoint, suite_hash, snapshot_id_for_dir,
-    compute_baseline, pin_suite, CKPT_SCHEMA, PinnedBaseline,
+    compute_baseline, pin_suite, CKPT_SCHEMA,
 )
 
 
@@ -40,12 +40,28 @@ def _norm_violations(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _psi_pair(*buckets):
+    """``drift_psi`` checks on ``n_tok``, one per bucket count, in order:
+    two checks on one column, each with its own histogram."""
+    return [Check(f"psi_b{nb}", "drift_psi",
+                  {"value_col": "n_tok", "buckets": nb, "threshold": 0.25})
+            for nb in buckets]
+
+
 def test_checkpointed_run_equals_plain_run(spark, seq, suite, tmp_path):
-    store = CheckpointStore(spark, str(tmp_path / "ckpt"))
-    res = run_with_checkpoint(seq, suite, store)
-    plain = run_checks(seq, suite)
-    assert _norm_verdicts(res.verdicts) == _norm_verdicts(plain.verdicts)
-    assert _norm_violations(res.violations) == _norm_violations(plain.violations)
+    """Also for two PSI checks that share a column: each is pinned to its
+    own histogram, in either order (when pins were keyed by column, the
+    [10, 20] order raised IndexError and [20, 10] scored psi_b10 against
+    the 20-bucket histogram)."""
+    for name, checks in (("default", suite), ("psi_10_20", _psi_pair(10, 20)),
+                         ("psi_20_10", _psi_pair(20, 10))):
+        store = CheckpointStore(spark, str(tmp_path / name))
+        res = run_with_checkpoint(seq, checks, store)
+        plain = run_checks(seq, checks)
+        assert _norm_verdicts(res.verdicts) == \
+            _norm_verdicts(plain.verdicts), name
+        assert _norm_violations(res.violations) == \
+            _norm_violations(plain.violations), name
 
 
 def test_second_run_skips_everything(spark, seq, suite, tmp_path):
@@ -256,47 +272,56 @@ def test_suite_hash_sees_transformations_over_same_files(spark, tmp_path):
 
 
 def test_ks_baseline_dirs_are_versioned_and_crash_safe(spark, tmp_path):
-    """The pinned KS count tables land in dirs versioned by (suite_hash,
-    snapshot): a re-pin for a NEW snapshot that crashes before the json
-    pointer swap must leave the OLD pointer's counts untouched — an
-    unversioned ks/<vc> dir would already be clobbered by the overwrite
-    write, so the old json would validly point at the new run's (or torn)
-    parquet: silently wrong ks_d. Superseded versions are pruned after the
-    swap, keeping the previous one as the manual-recovery fallback; the
-    legacy unversioned layout still loads."""
+    """The pinned count tables land in a dir versioned by (suite_hash,
+    snapshot), one subdir per check: a re-pin for a NEW snapshot that
+    crashes before the json pointer swap must leave the OLD pointer's
+    counts untouched — an unversioned dir would already be clobbered by
+    the overwrite write, so the old json would validly point at the new
+    run's (or torn) parquet: silently wrong ks_d. Superseded versions are
+    pruned after the swap, keeping the previous one as the manual-recovery
+    fallback. A baseline.json of the old layout, keyed by column, is a miss
+    and gets recomputed."""
+    import json
     import os
     store = CheckpointStore(spark, str(tmp_path / "ck"))
-    bl = PinnedBaseline(ks_value_cols=["n_tok"])
+    bl = {"ks": {"baseline_counts": None}}
     cnt_a = spark.createDataFrame([(10.0, 3)], "v double, c_b long")
     cnt_b = spark.createDataFrame([(99.0, 7)], "v double, c_b long")
-    store.save_baseline("S", "snapA", bl, {"n_tok": cnt_a})
+    store.save_baseline("S", "snapA", bl, {"ks": cnt_a})
+    assert os.listdir(os.path.join(store.ks_dir, "S_snapA")) == ["0"]
 
     # crashed re-pin for snapB: version dir written, json NOT swapped
-    cnt_b.write.parquet(os.path.join(store.ks_dir, "n_tok__S_snapB"))
-    assert store.load_baseline("S", "snapA") is not None
-    assert [(r["v"], r["c_b"]) for r in store.ks_counts("n_tok").collect()] \
+    cnt_b.write.parquet(os.path.join(store.ks_dir, "S_snapB", "0"))
+    assert store.load_baseline("S", "snapA") == bl
+    assert [(r["v"], r["c_b"]) for r in store.ks_counts("ks").collect()] \
         == [(10.0, 3)]
 
     # completed re-pin: pointer moves, previous version kept as fallback
-    store.save_baseline("S", "snapB", bl, {"n_tok": cnt_b})
-    assert [(r["v"], r["c_b"]) for r in store.ks_counts("n_tok").collect()] \
+    store.save_baseline("S", "snapB", bl, {"ks": cnt_b})
+    assert [(r["v"], r["c_b"]) for r in store.ks_counts("ks").collect()] \
         == [(99.0, 7)]
-    assert os.path.isdir(os.path.join(store.ks_dir, "n_tok__S_snapA"))
+    assert os.path.isdir(os.path.join(store.ks_dir, "S_snapA"))
     # a third pin prunes the first version (current + previous kept)
-    store.save_baseline("S", "snapC", bl, {"n_tok": cnt_a})
-    assert not os.path.isdir(os.path.join(store.ks_dir, "n_tok__S_snapA"))
-    assert os.path.isdir(os.path.join(store.ks_dir, "n_tok__S_snapB"))
+    store.save_baseline("S", "snapC", bl, {"ks": cnt_a})
+    assert sorted(os.listdir(store.ks_dir)) == ["S_snapB", "S_snapC"]
 
-    # legacy unversioned layout (json without ks_dirs) still loads
-    import json as _json
+    # old layout: pins keyed by column, one unversioned dir per column
+    df = spark.createDataFrame([("s1", 4), ("s1", 5)],
+                               "source string, n_tok int")
+    checks = [Check("ks", "drift_ks", {"value_col": "n_tok"})]
+    shash = suite_hash(checks)
     legacy = CheckpointStore(spark, str(tmp_path / "ck_legacy"))
-    os.makedirs(legacy.ks_dir, exist_ok=True)
     cnt_a.write.parquet(os.path.join(legacy.ks_dir, "n_tok"))
     with open(legacy.baseline_json, "w") as f:
-        _json.dump({"suite_hash": "S", "snapshot_id": "snapA",
-                    "moments": {}, "psi": {}, "ks_value_cols": ["n_tok"]}, f)
-    assert [(r["v"], r["c_b"]) for r in legacy.ks_counts("n_tok").collect()] \
-        == [(10.0, 3)]
+        json.dump({"suite_hash": shash, "snapshot_id": "snapA",
+                   "moments": {}, "psi": {}, "ks_value_cols": ["n_tok"]}, f)
+    assert legacy.load_baseline(shash, "snapA") is None
+    pinned = legacy.pinned_suite(df, checks, shash, "snapA")
+    assert legacy.load_baseline(shash, "snapA") == \
+        {"ks": {"baseline_counts": None}}
+    assert sorted((r["v"], r["c_b"]) for r in
+                  pinned[0].params["baseline_counts"].collect()) == \
+        [(4.0, 1), (5.0, 1)]
 
 
 def test_compute_baseline_degrades_gracefully_on_degenerate_input(spark, tmp_path):

@@ -137,6 +137,18 @@ def test_suite_on_empty_input(spark, seq):
                 {c.check_id for c in suite}
 
 
+def test_duplicate_check_id_rejected(spark, seq):
+    """A check id names the check's verdict rows and keys its pinned
+    baseline, so a suite that repeats one (a YAML ``checks:`` list can) is
+    rejected before any plan is built, with the id in the message."""
+    suite = [Check("psi'n", "drift_psi", {"value_col": "n_tok"}),
+             Check("stats", "column_stats", {"value_col": "n_tok"}),
+             Check("psi'n", "drift_psi", {"value_col": "n_tok",
+                                          "buckets": 20})]
+    with pytest.raises(ValueError, match="duplicate check_id \"psi'n\""):
+        run_checks(seq, suite)
+
+
 def test_jsonl_source_equals_parquet_source(spark, sf_dir):
     """The JSON-lines ingest path must be row-identical to the parquet path
     (explicit schema, no inference)."""

@@ -232,7 +232,8 @@ def test_referential_allowed_frame_with_null_member(spark, tmp_path):
 def test_psi_baseline_frame(spark, tmp_path, baseline):
     """PSI against a baseline frame: buckets over the BASELINE's [min, max]
     (scored values outside it clamp to the edge buckets); a frame with no
-    non-NULL value puts every row in bucket 0."""
+    non-NULL value puts every row in bucket 0. A self-baselined PSI check
+    on the same column keeps the input's own bounds."""
     rows = {"shifted": [(v,) for v in (1.0, 2.0, 2.0, 4.0, 5.0, 5.0, 6.0,
                                        None)],
             "all_null": [(None,), (None,)],
@@ -240,7 +241,9 @@ def test_psi_baseline_frame(spark, tmp_path, baseline):
     base = spark.createDataFrame(rows, "n_tok double")
     suite = [Check("psi", "drift_psi",
                    {"value_col": "n_tok", "buckets": 4, "threshold": 0.25,
-                    "baseline": base})]
+                    "baseline": base}),
+             Check("psi_self", "drift_psi",
+                   {"value_col": "n_tok", "buckets": 4, "threshold": 0.25})]
     verdicts, _ = assert_matches_oracle(
         spark, _small(spark), suite, tmp_path, f"psi_{baseline}")
     assert {r["partition_id"] for r in verdicts} == {"s1", "s2", "s3", None}
