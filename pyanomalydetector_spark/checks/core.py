@@ -90,6 +90,13 @@ def _sq(s: str) -> str:
     return "'" + str(s).replace("'", "''") + "'"
 
 
+def _bt(name: str) -> str:
+    """Backtick-quoted identifier for user-supplied column names. Spark's
+    identifier-escape convention is DOUBLING the backtick — stripping would
+    silently resolve a column literally named ``a`b`` to ``ab``."""
+    return "`" + str(name).replace("`", "``") + "`"
+
+
 def _d(x: float) -> str:
     """Exact DOUBLE literal: repr() is shortest-round-trip, so the parsed
     double is bit-identical to the Python float F.lit() would have sent
@@ -176,8 +183,15 @@ class CheckResult:
             return fv.result(), fw.result()
 
 
-def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
-    return spark.createDataFrame([], schema)
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """A 0-row frame of ``schema`` that Catalyst sees is empty: typed NULLs
+    filtered by FALSE optimize to an empty ``LocalRelation``
+    (``LocalTableScan <empty>``), which every union drops. ``createDataFrame([], schema)`` is a Python-RDD scan instead:
+    never pruned, it ran one Python-worker task per default-parallelism slot
+    in every job it joined."""
+    return spark.range(1).selectExpr(*(
+        f"CAST(NULL AS {f.dataType.simpleString()}) AS {_bt(f.name)}"
+        for f in schema.fields)).where("FALSE")
 
 
 def sized_to_input(frame: DataFrame, df: DataFrame) -> DataFrame:
@@ -413,7 +427,7 @@ def _check_token_invariant(df: DataFrame, check: Check, pcol: str) -> CheckResul
     if not bad_pids:
         # clean corpus: zero extra scans, provably no violations
         return CheckResult(verdicts,
-                           _empty(df.sparkSession, VIOLATION_SCHEMA))
+                           empty_frame(df.sparkSession, VIOLATION_SCHEMA))
 
     # dirty path: re-derive the digest join, but push the (tiny, known from
     # the checkpointed rollup) failing-partition set into the observed-side
@@ -443,7 +457,8 @@ def _check_drift_ks(df: DataFrame, check: Check, pcol: str) -> CheckResult:
         passed=f"(ks_d <= {_d(threshold)})", observed="ks_d",
         expected=_d(threshold), threshold=_d(threshold), n_violations="0",
         rows_scanned="rows_scanned")
-    return CheckResult(verdicts, _empty(df.sparkSession, VIOLATION_SCHEMA))
+    return CheckResult(verdicts,
+                       empty_frame(df.sparkSession, VIOLATION_SCHEMA))
 
 
 # kinds with their own plans; the aggregate kinds are built by checks/fused.py
@@ -497,8 +512,8 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
     results += [_DISPATCH[c.kind](df, c, partition_col)
                 for c in checks if c.kind not in FUSIBLE_KINDS]
     if not results:
-        return CheckResult(_empty(df.sparkSession, VERDICT_SCHEMA),
-                           _empty(df.sparkSession, VIOLATION_SCHEMA))
+        return CheckResult(empty_frame(df.sparkSession, VERDICT_SCHEMA),
+                           empty_frame(df.sparkSession, VIOLATION_SCHEMA))
 
     verdicts = reduce(DataFrame.unionByName, (r.verdicts for r in results))
     violations = reduce(DataFrame.unionByName,

@@ -72,8 +72,11 @@ def baseline_params(check, df: DataFrame) -> dict:
     moments; an explicit zscore frame is one (mean, std) row, which
     ``plain_config`` reads), PSI → ``pinned_hist`` with THIS check's
     buckets, KS → lazy ``baseline_counts``; ``{}`` for other kinds. An input
-    with no non-NULL value (empty, or an all-NULL column) pins no zscore or
-    PSI baseline; an explicit PSI frame is pinned whatever it holds."""
+    with no non-NULL value pins no zscore baseline, and an empty input no
+    PSI histogram; a non-empty all-NULL column pins its degenerate
+    histogram (every row in bucket 0), as an explicit PSI frame is pinned
+    whatever it holds — unpinned, each resumed run or stream batch would
+    score against only the rows it scans."""
     p = check.params
     vc = p.get("value_col", "n_tok")
     if check.kind == "zscore_threshold":
@@ -86,8 +89,7 @@ def baseline_params(check, df: DataFrame) -> dict:
     if check.kind == "drift_psi":
         hist = psi_histogram(df, vc, int(p.get("buckets", 10)))
         own = p.get("baseline") is not None
-        return {"pinned_hist": hist} if own or hist["lo"] is not None \
-            else {}
+        return {"pinned_hist": hist} if own or hist["n_base"] else {}
     if check.kind == "drift_ks":
         return {"baseline_counts": ks_value_counts(df, vc)}
     return {}

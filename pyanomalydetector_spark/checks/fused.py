@@ -75,8 +75,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyanomalydetector_spark.checks.core import (
-    VIOLATION_SCHEMA, CheckResult, _d, _empty, _sq, sized_to_input,
-    verdict_select, violation_select,
+    VIOLATION_SCHEMA, CheckResult, _bt, _d, _sq, empty_frame,
+    sized_to_input, verdict_select, violation_select,
 )
 from pyanomalydetector_spark.checks.drift import PSI_SMOOTH, baseline_params
 
@@ -132,13 +132,6 @@ def plain_config(check):
 
 
 # ------------------------------------------------- SQL-string construction ----
-
-def _bt(name: str) -> str:
-    """Backtick-quoted identifier for user-supplied column names. Spark's
-    identifier-escape convention is DOUBLING the backtick — stripping would
-    silently resolve a column literally named ``a`b`` to ``ab``."""
-    return "`" + str(name).replace("`", "``") + "`"
-
 
 def _ctag(name: str) -> str:
     """Deterministic identifier-safe tag for a user column name, for use
@@ -502,7 +495,7 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str) -> CheckResult:
             raise ValueError(f"not fusible: {c.kind}")
 
     # ---- pass 2 plan: one scan emitting every row-level violation ----------
-    violations = _empty(df.sparkSession, VIOLATION_SCHEMA)
+    violations = empty_frame(df.sparkSession, VIOLATION_SCHEMA)
     if viol_entries:
         viol_src = df
         for frame, keycol in viol_joins:

@@ -39,9 +39,11 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pyanomalydetector_spark.checks.core import (
-    Check, CheckResult, run_checks, VERDICT_SCHEMA, VIOLATION_SCHEMA,
+    Check, CheckResult, empty_frame, run_checks, VERDICT_SCHEMA,
+    VIOLATION_SCHEMA,
 )
 from pyanomalydetector_spark.checks.drift import baseline_params
 
@@ -169,7 +171,7 @@ class CheckpointStore:
         if self.catalog:
             return self.spark.table(self.ckpt_table)
         if not os.path.isdir(self.ckpt_dir):
-            return self.spark.createDataFrame([], CKPT_SCHEMA)
+            return empty_frame(self.spark, StructType.fromDDL(CKPT_SCHEMA))
         df = self.spark.read.parquet(self.ckpt_dir)
         w = Window.partitionBy("partition_id").orderBy(F.desc("run_id"))
         return df.withColumn("_rn", F.row_number().over(w)) \
@@ -306,7 +308,7 @@ class CheckpointStore:
     # ------------------------------------------------------------ results ---
     def _read_results(self, directory: str, schema, shash: str, snap: str) -> DataFrame:
         if not os.path.isdir(directory):
-            return self.spark.createDataFrame([], schema)
+            return empty_frame(self.spark, schema)
         df = self.spark.read.parquet(directory) \
                  .filter((F.col("suite_hash") == shash)
                          & (F.col("snapshot_id") == snap))
@@ -336,10 +338,11 @@ def compute_baseline(df: DataFrame,
     the user's reference is already a run-stable external constant, and
     pinning an input-derived baseline over it would silently turn drift-
     vs-reference into self-comparison (PSI ≈ 0, drift never flagged) and
-    z-scores against the wrong mean/std. Degenerate inputs (empty, or an
-    all-NULL value column) pin no zscore or PSI baseline — the unpinned
+    z-scores against the wrong mean/std. An empty input pins no zscore or
+    PSI baseline and an all-NULL value column no zscore one — the unpinned
     check then degrades exactly like the plain ``run_checks`` path (no
-    verdict rows), preserving one-shot ≡ resumed parity."""
+    verdict rows); an all-NULL PSI column pins its degenerate histogram,
+    so resumed runs score against the first run's rows, not their own."""
     bl: dict[str, dict] = {}
     tables: dict[str, DataFrame] = {}
     for c in checks:

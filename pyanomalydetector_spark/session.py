@@ -36,6 +36,14 @@ def get_spark(app_name: str = "pyanomalydetector-spark", master: str | None = No
         # storm) with it off. The only loss is the Python call-site line in
         # error QueryContexts; the engine's own errors carry their context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache sized to the check suite (a static conf, read
+        # once per JVM): the default suite's first 5k-row micro-batch
+        # compiles 141 classes, and a warm batch touches its classes in the
+        # same order every time, so the default 100-entry LRU evicted each
+        # before its next use — 94-107 Janino compiles per warm batch, whose
+        # classes then also ran unJITted. At 1000 a warm batch compiles only
+        # the 4 projections that carry its run_id literal.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

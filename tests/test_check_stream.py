@@ -4,7 +4,7 @@ baseline and idempotent redelivery."""
 import pytest
 from pyspark.sql import functions as F
 
-from pyanomalydetector_spark.sources.sequences import load_sequences
+from pyanomalydetector_spark.sources.sequences import SEQ_SCHEMA, load_sequences
 from pyanomalydetector_spark.checks.core import Check, run_checks, default_suite
 from pyanomalydetector_spark.plans.checkpoint import (
     suite_hash, pin_suite,
@@ -41,26 +41,41 @@ def _psi_pair(*buckets):
             for nb in buckets]
 
 
+def _null_psi_probe(spark):
+    """40 rows with NULL ``n_tok`` over sources p0..p3 of 4, 8, 12 and 16
+    rows (halves of 12 and 28 rows), and one 10-bucket ``drift_psi`` check
+    on the column: its baseline is the degenerate histogram (every row in
+    bucket 0), and the smoothed score depends on how many rows that
+    histogram counts."""
+    rows = [(f"p{s}_{i}", [1], None, f"p{s}")
+            for s in range(4) for i in range(4 * (s + 1))]
+    return spark.createDataFrame(rows, SEQ_SCHEMA), _psi_pair(10)
+
+
 def test_stream_validates_each_batch(spark, seq, tmp_path):
     """Batch 2 is judged against the baseline pinned from batch 1: its
     verdicts equal a one-shot run of the suite with batch 1 as every
     drift check's explicit ``baseline`` frame. Also for two PSI checks on
     one column, in either order — each keeps its own histogram (when pins
     were keyed by column, [10, 20] failed the batch with IndexError and
-    [20, 10] scored psi_b10 against the 20-bucket histogram)."""
-    parts = sorted(r["source"] for r in seq.select("source").distinct().collect())
-    half1, half2 = parts[: len(parts) // 2], parts[len(parts) // 2:]
-    b1 = seq.filter(F.col("source").isin(half1))
-
-    for name, suite in (("default", _suite(seq)),
-                        ("psi_10_20", _psi_pair(10, 20)),
-                        ("psi_20_10", _psi_pair(20, 10))):
+    [20, 10] scored psi_b10 against the 20-bucket histogram) — and for an
+    all-NULL PSI column (when such a column pinned nothing, batch 2 scored
+    against its own rows)."""
+    probe, probe_suite = _null_psi_probe(spark)
+    for name, df, suite in (("default", seq, _suite(seq)),
+                            ("psi_10_20", seq, _psi_pair(10, 20)),
+                            ("psi_20_10", seq, _psi_pair(20, 10)),
+                            ("null_psi", probe, probe_suite)):
+        parts = sorted(r["source"]
+                       for r in df.select("source").distinct().collect())
+        half1, half2 = parts[: len(parts) // 2], parts[len(parts) // 2:]
+        b1 = df.filter(F.col("source").isin(half1))
         base = tmp_path / name
         inp = str(base / "in")
         b1.write.mode("append").parquet(inp)
         runner = StreamingSuiteRunner(spark, str(base / "store"), suite)
 
-        q = stream_check_suite(spark, inp, seq.schema, runner,
+        q = stream_check_suite(spark, inp, df.schema, runner,
                                str(base / "ck"))
         _await_and_stop(q, 180)
         v1 = runner.verdicts().collect()
@@ -69,9 +84,9 @@ def test_stream_validates_each_batch(spark, seq, tmp_path):
 
         # second wave of files → validated as a new batch against the SAME
         # pinned baseline
-        seq.filter(F.col("source").isin(half2)) \
-           .write.mode("append").parquet(inp)
-        q = stream_check_suite(spark, inp, seq.schema, runner,
+        df.filter(F.col("source").isin(half2)) \
+          .write.mode("append").parquet(inp)
+        q = stream_check_suite(spark, inp, df.schema, runner,
                                str(base / "ck"))
         _await_and_stop(q, 180)
         v2 = runner.verdicts().collect()
@@ -91,10 +106,30 @@ def test_stream_validates_each_batch(spark, seq, tmp_path):
             return sorted((r["partition_id"], r["check_id"], r["passed"],
                            round(r["observed"], 6)) for r in rows)
         got2 = norm(r for r in v2 if r["partition_id"] in set(half2))
-        b2 = seq.filter(F.col("source").isin(half2))
+        b2 = df.filter(F.col("source").isin(half2))
         for expected in (pinned, framed):
             assert got2 == norm(run_checks(b2, expected).verdicts.collect()), \
                 name
+
+
+def test_warm_batch_compiles_only_its_run_id_literals(spark, seq, tmp_path):
+    """A warm micro-batch reuses the classes its predecessors generated:
+    the session's codegen class cache (session.py) holds the whole suite,
+    so batch 2 compiles only its per-batch ``run_id`` literal projections,
+    2 per result write (it compiled 107 classes with Spark's default
+    100-entry cache). The batches hold disjoint doc ids over the same
+    rows: a batch of another shape may take another adaptive plan (say, an
+    empty join side pruned at run time), whose classes are new."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    runner = StreamingSuiteRunner(spark, str(tmp_path / "store"), _suite(seq))
+    paths = [str(tmp_path / f"b{b}") for b in range(3)]
+    for b, path in enumerate(paths):
+        seq.withColumn("doc_id", F.concat("doc_id", F.lit(f"#{b}"))) \
+           .write.parquet(path)
+    for b, path in enumerate(paths):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        runner.apply_batch(spark.read.parquet(path), b)
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before <= 4
 
 
 def test_stream_batch_redelivery_noop(spark, seq, tmp_path):

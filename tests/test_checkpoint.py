@@ -8,7 +8,7 @@ check-suite engine.
 import pytest
 from pyspark.sql import functions as F
 
-from pyanomalydetector_spark.sources.sequences import load_sequences
+from pyanomalydetector_spark.sources.sequences import SEQ_SCHEMA, load_sequences
 from pyanomalydetector_spark.checks.core import Check, run_checks, default_suite
 from pyanomalydetector_spark.plans.checkpoint import (
     CheckpointStore, run_with_checkpoint, suite_hash, snapshot_id_for_dir,
@@ -48,18 +48,42 @@ def _psi_pair(*buckets):
             for nb in buckets]
 
 
+def _null_psi_probe(spark):
+    """40 rows with NULL ``n_tok`` over sources p0..p3 of 4, 8, 12 and 16
+    rows, and one 10-bucket ``drift_psi`` check on the column: its baseline
+    is the degenerate histogram (every row in bucket 0), and the smoothed
+    score depends on how many rows that histogram counts."""
+    rows = [(f"p{s}_{i}", [1], None, f"p{s}")
+            for s in range(4) for i in range(4 * (s + 1))]
+    return spark.createDataFrame(rows, SEQ_SCHEMA), _psi_pair(10)
+
+
 def test_checkpointed_run_equals_plain_run(spark, seq, suite, tmp_path):
     """Also for two PSI checks that share a column: each is pinned to its
     own histogram, in either order (when pins were keyed by column, the
     [10, 20] order raised IndexError and [20, 10] scored psi_b10 against
-    the 20-bucket histogram)."""
-    for name, checks in (("default", suite), ("psi_10_20", _psi_pair(10, 20)),
-                         ("psi_20_10", _psi_pair(20, 10))):
+    the 20-bucket histogram). And for an all-NULL PSI column resumed from
+    half its sources: the run ≡ a one-shot run under the stored pins (when
+    such a column pinned nothing, each run scored against only the rows it
+    scanned)."""
+    probe, probe_checks = _null_psi_probe(spark)
+    for name, df, checks, first in (
+            ("default", seq, suite, None),
+            ("psi_10_20", seq, _psi_pair(10, 20), None),
+            ("psi_20_10", seq, _psi_pair(20, 10), None),
+            ("null_psi", probe, probe_checks, ["p0", "p1"])):
         store = CheckpointStore(spark, str(tmp_path / name))
-        res = run_with_checkpoint(seq, checks, store)
-        plain = run_checks(seq, checks)
-        assert _norm_verdicts(res.verdicts) == \
-            _norm_verdicts(plain.verdicts), name
+        if first:
+            run_with_checkpoint(df.filter(F.col("source").isin(first)),
+                                checks, store)
+            checks_ref = pin_suite(checks, store.load_baseline(
+                suite_hash(checks), "static"), store)
+        else:
+            checks_ref = checks
+        res = run_with_checkpoint(df, checks, store)
+        plain = run_checks(df, checks_ref)
+        got = _norm_verdicts(res.verdicts)
+        assert got and got == _norm_verdicts(plain.verdicts), name
         assert _norm_violations(res.violations) == \
             _norm_violations(plain.violations), name
 

@@ -314,6 +314,44 @@ def test_session_disables_call_site_capture(spark):
     assert not is_debugging_enabled()
 
 
+def test_session_sizes_codegen_cache_to_the_suite(spark):
+    """The default suite's first 5k-row micro-batch generates 141 classes
+    and a warm one touches them in the same order; Spark's default
+    100-entry class cache evicted each before its next use and recompiled
+    94-107 every batch (session.py). A static conf, read once per JVM;
+    pin it."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+def test_check_plans_have_no_empty_rdd_scan(spark, sf_dir, tmp_path):
+    """Empty result frames are a LocalRelation Catalyst drops from every
+    union (``checks.core.empty_frame``): no plan carries the Python-RDD
+    scan of ``createDataFrame([])``, which ran as Python-worker tasks in
+    every write it joined."""
+    from pyanomalydetector_spark.checks.core import (
+        Check, default_suite, run_checks,
+    )
+    from pyanomalydetector_spark.plans.checkpoint import CheckpointStore
+    seq = load_sequences(spark, sf_dir)
+    ks = Check("ks", "drift_ks", {"value_col": "n_tok"})
+    stats = Check("stats", "column_stats", {"value_col": "n_tok"})
+    psi = Check("psi", "drift_psi", {"value_col": "n_tok"})
+    default = run_checks(seq, default_suite(["src0", "src1"]))
+    no_rows = run_checks(seq, [stats, psi])
+    frames = {"default verdicts": default.verdicts,
+              "default violations": default.violations,
+              "ks violations": run_checks(seq, [ks]).violations,
+              "fused verdicts": no_rows.verdicts,
+              "fused violations": no_rows.violations,
+              "fresh checkpoint": CheckpointStore(
+                  spark, str(tmp_path / "ck")).read_checkpoint()}
+    for name, df in frames.items():
+        df.collect()          # the final AQE plan
+        assert "ExistingRDD" not in _plan(df), name
+    default.unpersist()
+    no_rows.unpersist()
+
+
 def _count_shuffle_exchanges(df) -> int:
     """ShuffleExchangeExec nodes ABOVE any InMemoryTableScan (walking the
     physical tree never descends into a cached relation's stored plan, so
